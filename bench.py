@@ -380,79 +380,6 @@ def _median_latency(probe, runs: int = 3) -> dict:
 #: full 125-query dict overflowed the driver's stdout-tail capture in
 #: rounds 1-6 -> ``parsed: null``; the complete dict now goes to
 #: BENCH_DETAIL.json instead).
-def suspect_host_bursts(
-    timings: dict[str, float],
-    repo_dir: str,
-    prev: dict[str, float] | None = None,
-    unchanged: set[str] | None = None,
-    sf: float | None = None,
-) -> dict:
-    """Machine-label per-query HOST bursts (VERDICT r14 #4): a query
-    whose wall time is >2x its value in the newest committed
-    builder-local detail, while its kernel/oracle hash is UNCHANGED
-    from the driver-verified KERNEL_BASELINE, is a host artifact
-    (mid-run contention burst, oversubscribed driver host) rather
-    than a code regression — r13's 5.1x range_join_price_bands spike
-    needed judge archaeology to adjudicate; this ships the
-    adjudication in the artifact.  Only pairs where the previous
-    local time is >= 0.5 s are considered (sub-half-second wall
-    times are scheduling noise at local[32]); a slowed query whose
-    kernel hash CHANGED is deliberately not labeled — that one may
-    be a real regression and must be investigated, not absolved.
-
-    ``prev``/``unchanged`` are injectable for tests; the defaults
-    read the newest BENCH_DETAIL_LOCAL_r*.json and recompute kernel
-    hashes against KERNEL_BASELINE.json."""
-    baseline_file = None
-    if prev is None:
-        import glob as _glob
-
-        stamped = [
-            (int(m.group(1)), p)
-            for p in _glob.glob(
-                os.path.join(repo_dir, "BENCH_DETAIL_LOCAL_r*.json"))
-            if (m := re.search(r"_r0*(\d+)\.json$", p))
-        ]
-        if not stamped:
-            return {"baseline_file": None, "queries": {}}
-        _, path = max(stamped)
-        baseline_file = os.path.basename(path)
-        with open(path) as f:
-            det = json.load(f)
-        # a ratio across DIFFERENT scale factors is meaningless (an
-        # sf0.001 smoke run would flag overhead-dominated queries as
-        # "bursts" against the sf0.1 local series) — label nothing
-        if sf is not None and det.get("sf") != sf:
-            return {"baseline_file": baseline_file, "queries": {},
-                    "skipped": f"sf mismatch: local detail is sf={det.get('sf')}"}
-        prev = det.get("queries", {})
-    if unchanged is None:
-        try:
-            from tools.kernel_audit import _hashes, _load_baseline
-
-            kb = _load_baseline(repo_dir)
-            unchanged = {
-                name for name, cur in _hashes().items()
-                if kb.get(name, {}).get("hash") == cur["hash"]
-            }
-        except Exception as e:  # label nothing rather than guess
-            print(f"BENCH SUSPECT-HOST HASH ERROR: {e}", file=sys.stderr)
-            unchanged = set()
-    flagged = {}
-    for name, cur in timings.items():
-        p = prev.get(name)
-        if p is None or p < 0.5 or cur < 0:
-            continue
-        ratio = cur / p
-        if ratio > 2.0 and name in unchanged:
-            flagged[name] = {
-                "prev_local_sec": round(p, 3),
-                "sec": round(cur, 3),
-                "ratio": round(ratio, 2),
-            }
-    return {"baseline_file": baseline_file, "queries": flagged}
-
-
 _COMPACT_QUERIES = (
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -477,13 +404,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     registry = load_registry()
-    # Canonical sorted-name execution order, INDEPENDENT of the
-    # _DRIVER_PRIORITY rotation (VERDICT r11 "What's wrong" #4): the
-    # registry's iteration order is reshuffled every round by the
-    # freshness rotation, and position effects (shared tracked caches,
-    # JIT warm-up, page cache) contaminated per-query cross-round
-    # ratios badly enough to need warm-run adjudication each round.
-    # A fixed order makes the per-query series comparable directly.
+    # Sorted-name execution order, independent of registration order:
+    # position effects (shared tracked caches, JIT warm-up, page cache)
+    # would otherwise move per-query numbers whenever a query is added.
     headline = {
         name: registry[name] for name in sorted(registry) if registry[name].bench
     }
@@ -584,8 +507,6 @@ def main() -> None:
         calibration_post["cpu_saturate_ms"],
     ))
     corrected = round(total * host_factor, 3)
-    suspect = suspect_host_bursts(
-        timings, os.path.dirname(os.path.abspath(__file__)), sf=sf)
     detail = {
         "metric": "headline query wall time, sum over bench set",
         "value": total,
@@ -596,7 +517,6 @@ def main() -> None:
         "query_jobs": query_jobs,
         "query_stages": query_stages,
         "host_calibration": calibration,
-        "suspect_host": suspect,
         "sf": sf,
         "stream": stream,
         "stream_latency": latency,

@@ -1,13 +1,16 @@
-"""The main correctness gate, run locally: every catalog query with an
-oracle must match DuckDB at sf0.001 (the driver does the same at
-sf0.01). Mirrors the driver's row-count + schema + value comparison."""
+"""The main correctness gate: every catalog query with an oracle must
+match DuckDB at sf0.001 and again at sf0.01, on row count, schema and
+values."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
 from wire_spark.catalog import load_registry
 from wire_spark.oracle import compare_query, duckdb_connection
+from wire_spark.queries._util import release_tracked_caches
 
 REGISTRY = load_registry()
 _WITH_ORACLE = sorted(name for name, q in REGISTRY.items() if q.oracle is not None)
@@ -25,23 +28,29 @@ def test_oracle_parity(spark, con, sf_dir, name):
     assert res.ok, str(res)
 
 
+@pytest.fixture(scope="module")
+def sf01_dir(sf_dir):
+    return os.path.join(os.path.dirname(sf_dir), "sf0.01")
+
+
+@pytest.fixture(scope="module")
+def con01(sf01_dir):
+    return duckdb_connection(sf01_dir)
+
+
+@pytest.mark.parametrize("name", _WITH_ORACLE)
+def test_oracle_parity_sf0_01(spark, con01, sf01_dir, name):
+    q = REGISTRY[name]
+    try:
+        res = compare_query(spark, con01, name, q.fn, q.oracle, sf01_dir)
+    finally:
+        # sf0.01 caches would otherwise pile up in the shared test session
+        release_tracked_caches()
+    assert res.ok, str(res)
+
+
 def test_registry_nonempty():
     assert len(REGISTRY) >= 25
-
-
-def test_driver_priority_window():
-    """The driver records rows only for the first 50 names in
-    ``queries()`` iteration order; ``_DRIVER_PRIORITY`` controls that
-    window. It must hold exactly 50 distinct, registered names, and
-    the registry must yield them first.
-    """
-    from wire_spark.catalog import _DRIVER_PRIORITY
-
-    assert len(_DRIVER_PRIORITY) == 50
-    assert len(set(_DRIVER_PRIORITY)) == 50
-    missing = [n for n in _DRIVER_PRIORITY if n not in REGISTRY]
-    assert not missing, f"priority names not registered: {missing}"
-    assert list(REGISTRY)[:50] == list(_DRIVER_PRIORITY)
 
 
 def test_no_hugeint_or_decimal_oracle_outputs(con):

@@ -187,69 +187,3 @@ def test_host_correction_factor_deadband_and_floor():
     xs = [ref * m for m in (0.5, 1.0, 1.3, 1.5, 2.0, 4.0, 10.0)]
     fs = [bench.host_correction_factor(x) for x in xs]
     assert all(a >= b for a, b in zip(fs, fs[1:]))
-
-
-def test_suspect_host_bursts_planted_slowdown(tmp_path):
-    """The artifact machine-labels per-query host bursts (VERDICT r14
-    #4): a planted >2x slowdown on an unchanged kernel fires; a
-    slowdown on a CHANGED kernel, a sub-0.5s baseline, or a <=2x
-    ratio does not."""
-    import json as _json
-
-    import bench
-
-    prev_file = tmp_path / "BENCH_DETAIL_LOCAL_r99.json"
-    prev_file.write_text(_json.dumps({"queries": {
-        "q_burst": 1.0,        # unchanged kernel, planted 5x -> fires
-        "q_edited": 1.0,       # changed kernel, 5x -> NOT labeled
-        "q_tiny": 0.1,         # sub-0.5s baseline -> ignored
-        "q_steady": 2.0,       # 1.1x -> ignored
-    }}))
-    timings = {"q_burst": 5.0, "q_edited": 5.0, "q_tiny": 0.9,
-               "q_steady": 2.2, "q_new": 3.0}
-    out = bench.suspect_host_bursts(
-        timings, str(tmp_path),
-        unchanged={"q_burst", "q_tiny", "q_steady"},
-    )
-    assert out["baseline_file"] == "BENCH_DETAIL_LOCAL_r99.json"
-    assert set(out["queries"]) == {"q_burst"}
-    rec = out["queries"]["q_burst"]
-    assert rec["ratio"] == 5.0 and rec["prev_local_sec"] == 1.0
-
-    # no local detail on disk -> labels nothing, never raises
-    empty = bench.suspect_host_bursts(timings, str(tmp_path / "nowhere"),
-                                      unchanged=set())
-    assert empty == {"baseline_file": None, "queries": {}}
-
-
-def test_suspect_host_default_hash_gate_runs():
-    """The default (non-injected) path computes kernel hashes against
-    KERNEL_BASELINE.json without raising, and an all-fast timings map
-    labels nothing on the real repo artifacts."""
-    import os as _os
-
-    import bench
-
-    repo = _os.path.dirname(_os.path.abspath(bench.__file__))
-    out = bench.suspect_host_bursts({"q1_pricing_summary": 0.001}, repo)
-    assert out["queries"] == {}
-    assert out["baseline_file"] is not None
-
-
-def test_suspect_host_skips_cross_sf_comparison(tmp_path):
-    """A ratio across different scale factors is meaningless: an
-    sf0.001 smoke run must not flag overhead-dominated queries as
-    bursts against the sf0.1 local series."""
-    import json as _json
-
-    import bench
-
-    (tmp_path / "BENCH_DETAIL_LOCAL_r99.json").write_text(_json.dumps(
-        {"sf": 0.1, "queries": {"q_burst": 1.0}}))
-    out = bench.suspect_host_bursts({"q_burst": 5.0}, str(tmp_path),
-                                    unchanged={"q_burst"}, sf=0.001)
-    assert out["queries"] == {} and "sf mismatch" in out["skipped"]
-    # matching sf still fires
-    out = bench.suspect_host_bursts({"q_burst": 5.0}, str(tmp_path),
-                                    unchanged={"q_burst"}, sf=0.1)
-    assert set(out["queries"]) == {"q_burst"}

@@ -263,11 +263,10 @@ def test_two_writer_race_no_lost_updates(spark, tmp_path):
 
 
 def test_staged_txn_lifecycle_matches_duckdb_oracle(spark):
-    """The staged catalog entry (queries/kv.py, registers at a later
-    round open): create -> merge(update+delete) -> replay no-op ->
-    merge(insert) -> aggregate the time-traveled initial AND final
-    snapshots; value equality vs the inline DuckDB recomputation at
-    two SFs."""
+    """The unregistered catalog query (queries/kv.py): create ->
+    merge(update+delete) -> replay no-op -> merge(insert) -> aggregate
+    the time-traveled initial AND final snapshots; value equality vs
+    the inline DuckDB recomputation at two SFs."""
     import duckdb
 
     from wire_spark.queries.kv import (

@@ -5,15 +5,13 @@ operator rows to implementations, but predates the round-9 waves and
 never enumerated the registry itself.  This tool appends (or
 replaces) a GENERATED section between marker comments: every catalog
 query grouped by SURVEY §2 / LLM-brief family, with its module,
-bench-set membership, newest driver-green round (from
-FRESHNESS.json), and the first docstring sentence.
+bench-set membership and the first docstring sentence.
 
 Run from the repo root:  python tools/coverage_map.py
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 
@@ -71,7 +69,6 @@ def generate(root: str = ".") -> str:
     from wire_spark.catalog import load_registry
 
     reg = load_registry()
-    fresh = json.load(open(os.path.join(root, "FRESHNESS.json")))["queries"]
 
     by_mod: dict[str, list] = {}
     for q in reg.values():
@@ -80,9 +77,8 @@ def generate(root: str = ".") -> str:
     lines = [BEGIN, "", "## Full query inventory (generated)", ""]
     lines.append(
         f"All **{len(reg)}** catalog queries (every one paired with an exact "
-        "DuckDB oracle in `oracle_sql()`), grouped by family.  \"green\" = "
-        "newest round with a driver-verified rows+schema+hash match "
-        "(FRESHNESS.json); \"bench\" marks the bench.py headline set."
+        "DuckDB oracle in `oracle_sql()`), grouped by family.  \"bench\" "
+        "marks the bench.py headline set."
     )
     lines.append("")
     for mod in sorted(by_mod, key=lambda m: (FAMILIES.get(m, (m, ""))[0], m)):
@@ -90,14 +86,12 @@ def generate(root: str = ".") -> str:
         qs = sorted(by_mod[mod], key=lambda q: q.name)
         lines.append(f"### {fam} — `queries/{mod}.py` ({len(qs)}) — {anchor}")
         lines.append("")
-        lines.append("| query | green | bench | what it computes |")
-        lines.append("|---|---|---|---|")
+        lines.append("| query | bench | what it computes |")
+        lines.append("|---|---|---|")
         for q in qs:
-            g = fresh.get(q.name, {}).get("newest_green")
-            green = f"r{g}" if g is not None else "never"
             doc = first_sentence(q.doc).replace("|", "\\|")
             lines.append(
-                f"| `{q.name}` | {green} | {'yes' if q.bench else ''} | {doc} |"
+                f"| `{q.name}` | {'yes' if q.bench else ''} | {doc} |"
             )
         lines.append("")
     lines.append(END)

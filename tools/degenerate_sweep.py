@@ -97,9 +97,9 @@ KNOWN_DUPROWS: set[str] = {
     "ann_recall_audit", "negative_sampling_pairs",
     # mechanism 3: semi-vs-inner verify join fanout
     "bloom_join_prune",
-    # mechanism 1 again, pre-adjudicated for the STAGED txn lifecycle
-    # query (queries/kv.py, registers at a later round open): the txn
-    # table's MERGE collapses every updated/inserted key to ONE row
+    # mechanism 1 again, pre-adjudicated for the unregistered txn
+    # lifecycle query (queries/kv.py): the txn table's MERGE
+    # collapses every updated/inserted key to ONE row
     # (per-key last-writer-wins) while the oracle's CASE/UNION keeps
     # both physical copies (verified on the corpus: final n_orders
     # 551 kernel vs 572 oracle; the initial-snapshot rows agree)

@@ -1,9 +1,11 @@
-"""Drive a list of catalog queries against their DuckDB oracles at a
-given SF — the local equivalent of the driver gate, for re-verifying
-kernels edited during an optimization round.
+"""Compare catalog queries with their DuckDB oracles at a given SF.
 
-Usage: python tools/verify_edited.py <sf_dir> name [name ...]
-Exit 0 iff every named query matches.
+Usage:
+    python tools/verify_edited.py <sf_dir>                 # every oracle-backed query
+    python tools/verify_edited.py <sf_dir> name [name ...] # only these
+
+Pointed at the sf0.1 tables with no names, it is the full-registry
+bit-identity check at sf0.1.  Exit 0 iff every checked query matches.
 """
 
 from __future__ import annotations
@@ -20,8 +22,8 @@ from wire_spark.oracle import compare_query, duckdb_connection  # noqa: E402
 
 def main() -> None:
     sf_dir = sys.argv[1]
-    names = sys.argv[2:]
     registry = load_registry()
+    names = sys.argv[2:] or [n for n, q in registry.items() if q.oracle is not None]
     unknown = [n for n in names if n not in registry]
     if unknown:
         print(f"unknown queries: {unknown}", file=sys.stderr)

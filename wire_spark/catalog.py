@@ -62,93 +62,6 @@ _QUERY_MODULES = (
     "wire_spark.queries.variant_ingest",
 )
 
-# The driver's CORRECTNESS file records only the FIRST 50 names in
-# ``queries()`` dict-iteration order (verified empirically across
-# rounds 1-2).  Every query keeps its local oracle gate regardless
-# (tests/test_catalog_oracle.py runs all of them), but a green driver
-# row is the stronger evidence — so each round we front-load the
-# names that have not yet earned one.  Names listed here are yielded
-# first (in this order); everything else follows in registration
-# order.
-#
-# Freshness is machine-audited: tools/freshness.py regenerates
-# FRESHNESS.json from the CORRECTNESS_r*.json history and
-# tests/test_freshness.py asserts every registry query is either
-# inside this window or green within the last MAX_STALENESS_ROUNDS=5
-# rounds, and that the registry size never exceeds the rotation
-# capacity (window × MAX_STALENESS_ROUNDS = 250).
-# Round 16 window (50 slots), generated by tools/rotate_window.py
-# (NOTES.md round-16 log): the FORCED 47-query r11-green cohort (due at
-# the MAX_STALENESS_ROUNDS=5 horizon this round) + 3 slack slots under
-# the EDITED_SINCE_GREEN rule — corpus_js_divergence (r13 fixed-point
-# wave, the oldest un-regreened edit), then ann_ivf_lloyd_cosine and
-# bloom_join_prune from the r15 optimization wave.  The forced cohort
-# itself carries 14 more r15-edited names (ann_recall_audit,
-# dedup_connected_components, dedup_lsh_quality_audit,
-# dedup_survivors_central, events_survival_hazard,
-# graph_pagerank_personalized/_weighted, knn_label_agreement,
-# percentile_order_value_bucketed, preference_bt_strength,
-# rollup_plus_tail_merge, rollup_time_lattice, sample_dedup_weighted,
-# window_range_frame_30m), so the r15 EDITED_SINCE_GREEN backlog
-# (VERDICT r15 "What's wrong" #1) clears except the r15-edited names
-# whose greens are younger than the forced horizon (kmeans pair,
-# ann_ivf_cosine, events_fdr_bh/_permutation_test,
-# percentile_order_value, dedup_components_lsh/_star) — those queue
-# for the r17 slack by the same rule.
-_DRIVER_PRIORITY: tuple[str, ...] = (
-    "ann_recall_audit",
-    "asof_join_click_purchase",
-    "basket_brand_pairs",
-    "curation_interleave_schedule",
-    "curation_token_budget_plan",
-    "customer_rfm_segments",
-    "dedup_connected_components",
-    "dedup_incremental_lsh",
-    "dedup_lsh_quality_audit",
-    "dedup_survivors_central",
-    "events_changepoint_cusum",
-    "events_fano_burstiness",
-    "events_hourly_anomaly",
-    "events_leadlag_xcorr",
-    "events_survival_hazard",
-    "experiment_ipw_ate",
-    "graph_kcore_peel",
-    "graph_pagerank_personalized",
-    "graph_pagerank_weighted",
-    "graph_triangle_count",
-    "knn_label_agreement",
-    "layout_zorder_audit",
-    "percentile_order_value_bucketed",
-    "preference_bt_strength",
-    "profile_documents_columns",
-    "range_join_order_bursts",
-    "record_linkage_customers",
-    "revenue_concentration_gini",
-    "rollup_plus_tail_merge",
-    "rollup_time_lattice",
-    "sample_dedup_weighted",
-    "search_bm25_ranked",
-    "search_conjunctive_terms",
-    "search_phrase_positional",
-    "segment_p90_spenders",
-    "sketch_countmin_freq",
-    "sketch_hll_merge",
-    "sketch_kmv_distinct",
-    "sketch_selfjoin_size",
-    "source_ablation_loso",
-    "supplier_return_pchart",
-    "text_bpe_pair_counts",
-    "text_bpe_second_merge",
-    "text_gopher_quality_rules",
-    "text_ngram_novelty",
-    "text_vocab_growth",
-    "window_range_frame_30m",
-    "corpus_js_divergence",
-    "ann_ivf_lloyd_cosine",
-    "bloom_join_prune",
-)
-
-
 
 @dataclass
 class CatalogQuery:
@@ -204,20 +117,8 @@ def register(name: str, oracle: str | None = None, doc: str = "", bench: bool = 
 
 
 def load_registry() -> dict[str, CatalogQuery]:
-    """Import all query modules and return the registry.
-
-    The returned dict's iteration order puts ``_DRIVER_PRIORITY``
-    names first (the driver checks only the first 50 entries — see
-    the comment on ``_DRIVER_PRIORITY``), then the remaining queries
-    in registration order.
-    """
+    """Import all query modules and return the registry, in
+    registration order."""
     for mod in _QUERY_MODULES:
         importlib.import_module(mod)
-    ordered: dict[str, CatalogQuery] = {}
-    for name in _DRIVER_PRIORITY:
-        if name in REGISTRY:
-            ordered[name] = REGISTRY[name]
-    for name, q in REGISTRY.items():
-        if name not in ordered:
-            ordered[name] = q
-    return ordered
+    return dict(REGISTRY)

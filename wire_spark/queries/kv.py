@@ -82,11 +82,8 @@ def kv_point_lookup(spark, sf_dir):
 
 
 # --------------------------------------------------------------------
-# STAGED (r15 -> register at a later round open, the r14-established
-# pattern): transactional-table lifecycle under one oracle-checked
-# query.  Registering mid-round would displace a forced name from the
-# freshness window; the never-checked-first rule gives staged queries
-# the next open's head slots.
+# Unregistered: transactional-table lifecycle under one oracle-checked
+# query; tests/test_txn.py compares it with its oracle.
 # --------------------------------------------------------------------
 
 TXN_LIFECYCLE_ORACLE = """

@@ -1437,11 +1437,7 @@ def vector_index_cdc_update(spark, sf_dir):
     (VERDICT r13 endorsed stretch): the reference's streaming-first
     identity (README.md:7) applied to the vector-index surface — the
     index FOLLOWS the change stream instead of being rebuilt per
-    batch.  Staged at r14 (operator + cross-engine test shipped),
-    REGISTERED at the r15 open where the never-checked-first rule
-    gives it the window's head slot — the r14 window was the full
-    50-query r9 cohort at its staleness horizon, so a r14
-    registration would have forced a freshness breach.
+    batch.
 
     Protocol under test, end to end:
 
