@@ -46,22 +46,32 @@ def test_components_raises_rather_than_wrong_labels(spark):
 
 
 def test_components_reliable_checkpoint_path(spark, tmp_path):
-    """checkpoint_dir engages reliable df.checkpoint() (cluster-safe
-    lineage truncation) and must produce the identical labeling."""
+    """A checkpoint dir on the session engages reliable df.checkpoint()
+    (cluster-safe lineage truncation): the labeling is identical to
+    the local path, the checkpoint data lands in that dir, and the
+    operator leaves the session's dir as it found it."""
+    import glob
+    import os
+
+    sc = spark.sparkContext
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 20)], ["src", "dst"]
     )
     local = {r.id: r.comp for r in connected_components(edges).collect()}
-    reliable = {
-        r.id: r.comp
-        for r in connected_components(
-            edges, checkpoint_dir=str(tmp_path / "ckpt")
-        ).collect()
-    }
+    ckpt = str(tmp_path / "ckpt")
+    sc.setCheckpointDir(ckpt)
+    try:
+        before = sc.getCheckpointDir()
+        reliable = {r.id: r.comp for r in connected_components(edges).collect()}
+        assert sc.getCheckpointDir() == before
+        assert glob.glob(os.path.join(ckpt, "*", "rdd-*"))
+    finally:
+        # Spark has no public unset; without it every later test in the
+        # session would silently switch to reliable checkpoints
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
+            getattr(getattr(sc._jvm, "scala.None$"), "MODULE$"))
+    assert sc.getCheckpointDir() is None
     assert reliable == local == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20}
-    # reliable checkpoint data actually landed in the directory
-    import glob, os
-    assert glob.glob(os.path.join(str(tmp_path / "ckpt"), "**"), recursive=True)
 
 
 def test_star_components_matches_label_prop(spark):
@@ -117,22 +127,6 @@ def test_star_components_random_graphs_property(spark):
         edges = spark.createDataFrame(edge_list, ["src", "dst"])
         got = {r.id: r.comp for r in connected_components_star(edges).collect()}
         assert got == truth, f"seed={seed}"
-
-
-def test_star_components_restores_checkpoint_dir(spark, tmp_path):
-    """The checkpoint_dir argument must not clobber a caller-set
-    session checkpoint dir (ADVICE: global side effect)."""
-    from wire_spark.operators.graph import connected_components_star
-
-    prior = str(tmp_path / "caller_dir")
-    spark.sparkContext.setCheckpointDir(prior)
-    edges = spark.createDataFrame([(1, 2)], ["src", "dst"])
-    connected_components_star(edges, checkpoint_dir=str(tmp_path / "op_dir")).collect()
-    opt = spark.sparkContext._jsc.sc().getCheckpointDir()
-    # spark appends a UUID subdir per setCheckpointDir call, so assert
-    # on the tree: back under the caller's dir, not the operator's
-    assert opt.isDefined()
-    assert "caller_dir" in opt.get() and "op_dir" not in opt.get()
 
 
 def _sym(spark, pairs):

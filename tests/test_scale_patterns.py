@@ -79,7 +79,7 @@ def test_jaccard_stop_shingle_cap_guards_candidates(spark, sf_dir):
     the 100 TB viral-shingle guard from dedup.py:_jaccard_pairs."""
     from wire_spark.queries.dedup import _jaccard_pairs, _shingle_df
 
-    sh = _shingle_df(spark, sf_dir, cache=False)
+    sh = _shingle_df(spark, sf_dir)
     df_prof = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     dropped = df_prof.filter(F.col("df") > 5).count()
     assert dropped > 0  # cap=5 really removes stop-shingles at sf0.001
@@ -528,28 +528,57 @@ def test_pii_scan_redact_audit(spark):
     assert "EvalPython" not in plan
 
 
-def test_tracked_caches_release_after_action(spark, sf_dir):
-    """Catalog queries cache bounded fragments through
-    ``tracked_cache`` so long-lived callers can evict them once their
+def test_tracked_caches_release_after_action(spark, sf_dir, tmp_path):
+    """Catalog queries keep intermediates through ``tracked_cache`` or
+    ``materialize`` so long-lived callers can free them once their
     actions finish (ADVICE r8: tcloseness_audit pinned its class x
-    bucket grid forever).  Pin the lifecycle: running the query
-    populates Spark's cache manager, ``release_tracked_caches`` emp-
-    ties it, and the released DataFrame still recomputes correctly."""
+    bucket grid forever; the checkpointed graph and median queries
+    held their RDDs until the session ended).  Pin the lifecycle:
+    after the action, ``release_tracked_caches`` empties the cache
+    manager and returns the persisted-RDD count to its pre-query
+    value.  A released cache still recomputes correctly; a released
+    checkpoint cannot be re-read, so only the cache case re-collects.
+    ``merge_upsert`` owns its checkpoint and frees it itself."""
+    from wire_spark.catalog import load_registry
+    from wire_spark.operators.upsert import merge_upsert, write_initial
     from wire_spark.queries._util import release_tracked_caches
-    from wire_spark.queries.governance import tcloseness_audit
 
     release_tracked_caches()  # isolate from earlier tests in the session
     cm = spark._jsparkSession.sharedState().cacheManager()
     cm.clearCache()
     assert cm.isEmpty()
+    held = spark.sparkContext._jsc.sc().getPersistentRDDs
+    reg = load_registry()
 
-    df = tcloseness_audit(spark, sf_dir)
-    before = df.collect()
-    assert not cm.isEmpty()  # the grid cache is live after the action
+    cases = [
+        ("tcloseness_audit", "cache"),  # the class x bucket grid
+        ("graph_kcore_peel", "checkpoint"),  # per-round truncation
+        ("dedup_components_star", "checkpoint"),  # the star operator
+        ("robust_outliers_mad", "checkpoint"),  # median tiers
+        ("preference_bt_strength", "checkpoint"),  # contest pairs
+    ]
+    for name, kind in cases:
+        n0 = held().size()
+        df = reg[name].fn(spark, sf_dir)
+        before = df.collect()
+        if kind == "cache":
+            assert not cm.isEmpty(), name  # the cache is live after the action
+        else:
+            assert held().size() > n0, name  # checkpoints are live
 
-    released = release_tracked_caches()
-    assert released >= 1
-    assert cm.isEmpty()  # nothing left pinned in storage memory
+        assert release_tracked_caches() >= 1, name
+        assert cm.isEmpty(), name  # nothing left pinned in storage memory
+        assert held().size() == n0, name
 
-    assert sorted(map(tuple, df.collect())) == sorted(map(tuple, before))
-    assert cm.isEmpty() or release_tracked_caches() >= 0  # recompute, no re-pin
+        if kind == "cache":
+            assert sorted(map(tuple, df.collect())) == sorted(map(tuple, before))
+            assert cm.isEmpty()  # recompute, no re-pin
+
+    path = str(tmp_path / "kv")
+    write_initial(spark.range(20).select(F.col("id").alias("k")), path, "k",
+                  n_buckets=4)
+    n0 = held().size()
+    merge_upsert(spark, path, spark.range(15, 25).select(F.col("id").alias("k")),
+                 "k", n_buckets=4)
+    assert held().size() == n0
+    assert release_tracked_caches() == 0  # nothing left for a caller to free

@@ -18,6 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from wire_spark.catalog import load_registry  # noqa: E402
 from wire_spark.engine import get_spark  # noqa: E402
 from wire_spark.oracle import compare_query, duckdb_connection  # noqa: E402
+from wire_spark.queries._util import release_tracked_caches  # noqa: E402
 
 
 def main() -> None:
@@ -43,12 +44,12 @@ def main() -> None:
             print(f"[FAIL] {name}: EXCEPTION {e}")
             n_fail += 1
             continue
+        finally:
+            # free this query's caches and checkpoints before the next
+            release_tracked_caches()
         print(str(res), flush=True)
         if not res.ok:
             n_fail += 1
-    from wire_spark.queries._util import release_tracked_caches
-
-    release_tracked_caches()
     spark.stop()
     sys.exit(1 if n_fail else 0)
 

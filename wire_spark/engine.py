@@ -64,6 +64,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        # progress bars would interleave with line-oriented output
+        # (tools/verify_edited.py's [OK]/[FAIL] lines)
+        .config("spark.ui.showConsoleProgress", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -17,53 +17,18 @@ single join can compute. Two algorithms, same shuffle primitives:
   snapshots) where label propagation would need thousands of rounds.
 
 Scale notes: per round: one or two shuffles on vertex id. Lineage is
-truncated per round with localCheckpoint (on a cluster: reliable
-checkpoint to storage) or the plan grows exponentially.
+truncated per round with ``materialize`` or the plan grows
+exponentially; the session's checkpoint dir decides between reliable
+checkpoints (a dir is configured: survives executor loss, required on
+a cluster) and executor-local ones (no dir).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _set_checkpoint_dir(spark: SparkSession, checkpoint_dir: str) -> str | None:
-    """Point the context at ``checkpoint_dir``, returning the previous
-    dir (or None) so callers can restore it — setCheckpointDir is a
-    session-global knob and operators must not clobber it silently."""
-    jsc_opt = spark.sparkContext._jsc.sc().getCheckpointDir()
-    prev = jsc_opt.get() if jsc_opt.isDefined() else None
-    spark.sparkContext.setCheckpointDir(checkpoint_dir)
-    return prev
-
-
-def _round_persister(
-    spark: SparkSession, checkpoint_dir: str | None
-) -> Callable[..., DataFrame]:
-    """Per-round lineage truncation: reliable checkpoint when a dir is
-    given (survives executor loss — required on a real cluster), else
-    executor-local localCheckpoint (single-JVM runs).
-
-    ``eager=False`` fuses the materialization into the CALLER'S next
-    action (the per-round convergence count): one job per round
-    instead of two — each saved job is also a saved scheduler
-    round-trip on a real cluster.  Only valid when exactly one action
-    follows before multi-branch reuse: a lazy checkpoint consumed by
-    two branches of one job races both branches into the cache and
-    can compute the round twice.  The reliable-checkpoint path stays
-    eager always: RDD ``checkpoint()`` recomputes the lineage when
-    the checkpoint job runs unless the data was already materialized,
-    so lazy reliable checkpointing would double-execute the round.
-    """
-
-    def persist(df: DataFrame, eager: bool = True) -> DataFrame:
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=eager)
-
-    return persist
+from wire_spark.queries._util import materialize
 
 
 #: hash-min rounds before pointer jumping engages: real dedup/identity
@@ -78,7 +43,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 20,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Return (id, comp) where comp = min vertex id reachable from id.
 
@@ -100,111 +64,102 @@ def connected_components(
     exhausts ``max_iter`` without converging the operator raises
     instead of returning a wrong answer.
 
-    ``checkpoint_dir``: when set, per-round lineage truncation uses
-    RELIABLE ``df.checkpoint()`` into that directory (survives executor
-    loss — required on a real cluster); when None, ``localCheckpoint``
-    (executor-local, fine for single-JVM runs, lost on executor death).
-    Setting it repoints the session-global checkpoint dir for the
-    duration of the call; any previously-configured dir is restored
-    before returning.
+    Per-round lineage truncation goes through ``materialize``: the
+    session's checkpoint dir decides between RELIABLE checkpoints
+    (a dir is configured: survives executor loss, required on a real
+    cluster) and executor-local ones (no dir: fine for single-JVM
+    runs, lost on executor death).  The checkpoints are tracked, so
+    the caller frees them with ``release_tracked_caches()`` after
+    its last action on the result.
     """
-    spark = edges.sparkSession
-    prev_dir = (
-        _set_checkpoint_dir(spark, checkpoint_dir) if checkpoint_dir is not None else None
+    # Materialize the raw edge list BEFORE symmetrizing: the
+    # union's two branches are separate copies of the ``edges``
+    # plan and Spark performs no cross-branch common-subtree
+    # elimination, so an expensive upstream edge derivation (a
+    # shingle-verify join, a banded LSH pipeline) would execute
+    # twice inside the symmetrize job. One narrow persist makes
+    # it run exactly once.
+    raw = materialize(
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     )
-    _persist_round = _round_persister(spark, checkpoint_dir)
-    try:
-        # Materialize the raw edge list BEFORE symmetrizing: the
-        # union's two branches are separate copies of the ``edges``
-        # plan and Spark performs no cross-branch common-subtree
-        # elimination, so an expensive upstream edge derivation (a
-        # shingle-verify join, a banded LSH pipeline) would execute
-        # twice inside the symmetrize job. One narrow persist makes
-        # it run exactly once.
-        raw = _persist_round(
-            edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    sym = materialize(
+        raw.union(raw.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        .distinct()
+    )
+    labels = (
+        sym.select(F.col("a").alias("id")).distinct().withColumn("comp", F.col("id"))
+    )
+    for rnd in range(max_iter):
+        neighbor_labels = (
+            sym.join(labels, sym.b == labels.id)
+            .select(F.col("a").alias("id"), F.col("comp"))
         )
-        sym = _persist_round(
-            raw.union(raw.select(F.col("b").alias("a"), F.col("a").alias("b")))
-            .distinct()
+        # the round's one aggregation carries BOTH the new label
+        # (min over self + neighbors) and the previous label (the
+        # self row is tagged), so convergence below is a narrow
+        # scan of this already-materialized relation — not the
+        # extra shuffle join per round it used to be (each avoided
+        # job also saves a scheduler round-trip on a real cluster)
+        stepped = (
+            labels.withColumn("is_self", F.lit(True))
+            .unionByName(neighbor_labels.withColumn("is_self", F.lit(False)))
+            .groupBy("id")
+            .agg(
+                F.min("comp").alias("comp"),
+                F.min(F.when(F.col("is_self"), F.col("comp"))).alias("old_comp"),
+            )
         )
-        labels = (
-            sym.select(F.col("a").alias("id")).distinct().withColumn("comp", F.col("id"))
+        if rnd >= _JUMP_AFTER:
+            # pointer jump: every label value is itself a vertex
+            # id (labels start as ids and min() only ever selects
+            # an existing label), so chase one level — comp <-
+            # comp's comp — which halves the label-tree height and
+            # makes the remaining round count logarithmic in graph
+            # diameter.  Left join + coalesce keeps the row even
+            # if a label's vertex were somehow absent (defensive;
+            # inner would drop the vertex).  Skipped for the first
+            # _JUMP_AFTER rounds — see the docstring.
+            #
+            # stepped is materialized BEFORE the self-join: the
+            # join's two inputs are the same union+groupBy
+            # subtree, and without persistence Spark executes the
+            # round's dominant shuffle/aggregation twice per jump
+            # round (AQE exchange reuse is an optimization, not a
+            # guarantee).
+            stepped = materialize(stepped)
+            hop = stepped.select(
+                F.col("id").alias("jid"), F.col("comp").alias("jcomp")
+            )
+            stepped = stepped.join(hop, stepped.comp == hop.jid, "left").select(
+                "id",
+                F.least(
+                    F.col("comp"), F.coalesce("jcomp", F.col("comp"))
+                ).alias("comp"),
+                "old_comp",
+            )
+        # lazy: the convergence count below is the round's single
+        # next action — it materializes the checkpoint and checks
+        # convergence in ONE job instead of two.  The count must
+        # be UNBOUNDED: a limit(1) count executes incrementally
+        # (first partition, then more), leaving the partitions it
+        # never touched uncached — and every later round would
+        # recompute them through the whole lazy-checkpoint chain
+        # (measured: 2.1 s -> 11.5 s before this guard).
+        new_labels = materialize(stepped, eager=False)
+        changed = (
+            new_labels.filter(F.col("comp") != F.col("old_comp")).count()
         )
-        for rnd in range(max_iter):
-            neighbor_labels = (
-                sym.join(labels, sym.b == labels.id)
-                .select(F.col("a").alias("id"), F.col("comp"))
-            )
-            # the round's one aggregation carries BOTH the new label
-            # (min over self + neighbors) and the previous label (the
-            # self row is tagged), so convergence below is a narrow
-            # scan of this already-materialized relation — not the
-            # extra shuffle join per round it used to be (each avoided
-            # job also saves a scheduler round-trip on a real cluster)
-            stepped = (
-                labels.withColumn("is_self", F.lit(True))
-                .unionByName(neighbor_labels.withColumn("is_self", F.lit(False)))
-                .groupBy("id")
-                .agg(
-                    F.min("comp").alias("comp"),
-                    F.min(F.when(F.col("is_self"), F.col("comp"))).alias("old_comp"),
-                )
-            )
-            if rnd >= _JUMP_AFTER:
-                # pointer jump: every label value is itself a vertex
-                # id (labels start as ids and min() only ever selects
-                # an existing label), so chase one level — comp <-
-                # comp's comp — which halves the label-tree height and
-                # makes the remaining round count logarithmic in graph
-                # diameter.  Left join + coalesce keeps the row even
-                # if a label's vertex were somehow absent (defensive;
-                # inner would drop the vertex).  Skipped for the first
-                # _JUMP_AFTER rounds — see the docstring.
-                #
-                # stepped is materialized BEFORE the self-join: the
-                # join's two inputs are the same union+groupBy
-                # subtree, and without persistence Spark executes the
-                # round's dominant shuffle/aggregation twice per jump
-                # round (AQE exchange reuse is an optimization, not a
-                # guarantee).
-                stepped = _persist_round(stepped)
-                hop = stepped.select(
-                    F.col("id").alias("jid"), F.col("comp").alias("jcomp")
-                )
-                stepped = stepped.join(hop, stepped.comp == hop.jid, "left").select(
-                    "id",
-                    F.least(
-                        F.col("comp"), F.coalesce("jcomp", F.col("comp"))
-                    ).alias("comp"),
-                    "old_comp",
-                )
-            # lazy: the convergence count below is the round's single
-            # next action — it materializes the checkpoint and checks
-            # convergence in ONE job instead of two.  The count must
-            # be UNBOUNDED: a limit(1) count executes incrementally
-            # (first partition, then more), leaving the partitions it
-            # never touched uncached — and every later round would
-            # recompute them through the whole lazy-checkpoint chain
-            # (measured: 2.1 s -> 11.5 s before this guard).
-            new_labels = _persist_round(stepped, eager=False)
-            changed = (
-                new_labels.filter(F.col("comp") != F.col("old_comp")).count()
-            )
-            labels = new_labels.select("id", "comp")
-            if changed == 0:
-                break
-        else:
-            raise RuntimeError(
-                f"connected_components did not converge within {max_iter} "
-                "rounds — raise max_iter (rounds past the first "
-                f"{_JUMP_AFTER} double the distance labels travel, so the "
-                "default budget covers diameter ~2^16)"
-            )
-        return labels
-    finally:
-        if prev_dir is not None:
-            spark.sparkContext.setCheckpointDir(prev_dir)
+        labels = new_labels.select("id", "comp")
+        if changed == 0:
+            break
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge within {max_iter} "
+            "rounds — raise max_iter (rounds past the first "
+            f"{_JUMP_AFTER} double the distance labels travel, so the "
+            "default budget covers diameter ~2^16)"
+        )
+    return labels
 
 
 def connected_components_star(
@@ -212,7 +167,6 @@ def connected_components_star(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Connected components via alternating large-star/small-star
     rounds (Kiveris et al., SoCC'14): returns (id, comp) with
@@ -227,109 +181,100 @@ def connected_components_star(
     only, candidate sets bounded by vertex degree.
 
     Vertex ids must be orderable (the component id is the min);
-    ``checkpoint_dir`` semantics match ``connected_components``.
+    checkpointing and release match ``connected_components``.
     """
-    spark = edges.sparkSession
-    prev_dir = (
-        _set_checkpoint_dir(spark, checkpoint_dir) if checkpoint_dir is not None else None
+    # Materialize the raw edge list ONCE before deriving verts and
+    # the canonical edge set: ``verts``'s union references the
+    # ``edges`` plan in two branches and ``e`` in a third, and
+    # Spark performs no cross-branch common-subtree elimination —
+    # an expensive upstream edge derivation (the banded MinHash
+    # pipeline) would execute three times. One narrow persist
+    # makes it run exactly once; verts then derives from the
+    # checkpointed rows, so it no longer needs its own persist.
+    raw = materialize(
+        edges.select(F.col(src).alias("x"), F.col(dst).alias("y"))
     )
-    persist = _round_persister(spark, checkpoint_dir)
-    try:
-        # Materialize the raw edge list ONCE before deriving verts and
-        # the canonical edge set: ``verts``'s union references the
-        # ``edges`` plan in two branches and ``e`` in a third, and
-        # Spark performs no cross-branch common-subtree elimination —
-        # an expensive upstream edge derivation (the banded MinHash
-        # pipeline) would execute three times. One narrow persist
-        # makes it run exactly once; verts then derives from the
-        # checkpointed rows, so it no longer needs its own persist.
-        raw = persist(
-            edges.select(F.col(src).alias("x"), F.col(dst).alias("y"))
+    verts = (
+        raw.select(F.col("x").alias("id"))
+        .union(raw.select(F.col("y").alias("id")))
+        .distinct()
+    )
+    # canonical undirected edge list (u > v), self-loops dropped
+    e = materialize(
+        raw.filter(F.col("x") != F.col("y"))
+        .select(
+            F.greatest("x", "y").alias("u"), F.least("x", "y").alias("v")
         )
-        verts = (
-            raw.select(F.col("x").alias("id"))
-            .union(raw.select(F.col("y").alias("id")))
-            .distinct()
-        )
-        # canonical undirected edge list (u > v), self-loops dropped
-        e = persist(
-            raw.filter(F.col("x") != F.col("y"))
-            .select(
-                F.greatest("x", "y").alias("u"), F.least("x", "y").alias("v")
-            )
-            .distinct()
-        )
-        from pyspark.sql import Window as W
+        .distinct()
+    )
+    from pyspark.sql import Window as W
 
-        w_u = W.partitionBy("u")
-        cnt_e = -1  # unknown until a round counts it; forces round 1 on
-        for _ in range(max_iter):
-            # large-star: every neighbor w > n links to min(N(n) ∪ {n}).
-            # The per-key min is a WINDOW over the same key the old
-            # groupBy+join pair shuffled on: one exchange of sym per
-            # half-round instead of two (the groupBy's partial-agg
-            # subtree differs from the join input's, so AQE could not
-            # reuse that exchange — guide §2.4 "two operations keyed
-            # the same way can share one exchange").
-            sym = e.select("u", "v").union(
-                e.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    w_u = W.partitionBy("u")
+    cnt_e = -1  # unknown until a round counts it; forces round 1 on
+    for _ in range(max_iter):
+        # large-star: every neighbor w > n links to min(N(n) ∪ {n}).
+        # The per-key min is a WINDOW over the same key the old
+        # groupBy+join pair shuffled on: one exchange of sym per
+        # half-round instead of two (the groupBy's partial-agg
+        # subtree differs from the join input's, so AQE could not
+        # reuse that exchange — guide §2.4 "two operations keyed
+        # the same way can share one exchange").
+        sym = e.select("u", "v").union(
+            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        )
+        large = (
+            sym.withColumn(
+                "m", F.least(F.min("v").over(w_u), F.col("u"))
             )
-            large = (
-                sym.withColumn(
-                    "m", F.least(F.min("v").over(w_u), F.col("u"))
-                )
-                .filter(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .filter(F.col("u") != F.col("v"))
-                .distinct()
-            )
-            # small-star: every neighbor w <= n links to min(N≤(n) ∪ {n})
-            # (canon rows have u > v, so min(v) over u is already the
-            # min over the closed neighborhood)
-            canon = large.select(
+            .filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
+        )
+        # small-star: every neighbor w <= n links to min(N≤(n) ∪ {n})
+        # (canon rows have u > v, so min(v) over u is already the
+        # min over the closed neighborhood)
+        canon = large.select(
+            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+        )
+        joined = canon.withColumn("m", F.min("v").over(w_u))
+        small = (
+            joined.select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .union(joined.select("u", F.col("m").alias("v")))
+            .filter(F.col("u") != F.col("v"))
+            .select(
                 F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
             )
-            joined = canon.withColumn("m", F.min("v").over(w_u))
-            small = (
-                joined.select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .union(joined.select("u", F.col("m").alias("v")))
-                .filter(F.col("u") != F.col("v"))
-                .select(
-                    F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-                )
-                .distinct()
-            )
-            # lazy: the count below materializes the round's checkpoint
-            # and reads the convergence cardinality in ONE job
-            new_e = persist(small, eager=False)
-            # Convergence: both relations are DISTINCT canonical edge
-            # sets, so |new_e| == |e| with new_e \ e == empty implies
-            # equality. Counts are remembered round-over-round (no
-            # recount of e), and the exceptAll shuffle only runs on
-            # count-stable rounds — during the shrinking phase (most
-            # rounds) convergence costs one cheap count job, not two
-            # set-difference shuffles.
-            cnt_new = new_e.count()
-            if cnt_new == cnt_e and new_e.exceptAll(e).limit(1).count() == 0:
-                e = new_e
-                break
-            cnt_e, e = cnt_new, new_e
-        else:
-            # same contract as connected_components: never return a
-            # partial labeling silently (r12 bigclique lesson)
-            raise RuntimeError(
-                f"connected_components_star did not converge within "
-                f"{max_iter} rounds — raise max_iter"
-            )
-        # fixpoint: e is a union of stars (node -> component min)
-        labels = e.groupBy(F.col("u").alias("id")).agg(F.min("v").alias("comp"))
-        return (
-            verts.join(labels, "id", "left")
-            .select("id", F.coalesce("comp", F.col("id")).alias("comp"))
+            .distinct()
         )
-    finally:
-        if prev_dir is not None:
-            spark.sparkContext.setCheckpointDir(prev_dir)
+        # lazy: the count below materializes the round's checkpoint
+        # and reads the convergence cardinality in ONE job
+        new_e = materialize(small, eager=False)
+        # Convergence: both relations are DISTINCT canonical edge
+        # sets, so |new_e| == |e| with new_e \ e == empty implies
+        # equality. Counts are remembered round-over-round (no
+        # recount of e), and the exceptAll shuffle only runs on
+        # count-stable rounds — during the shrinking phase (most
+        # rounds) convergence costs one cheap count job, not two
+        # set-difference shuffles.
+        cnt_new = new_e.count()
+        if cnt_new == cnt_e and new_e.exceptAll(e).limit(1).count() == 0:
+            e = new_e
+            break
+        cnt_e, e = cnt_new, new_e
+    else:
+        # same contract as connected_components: never return a
+        # partial labeling silently (r12 bigclique lesson)
+        raise RuntimeError(
+            f"connected_components_star did not converge within "
+            f"{max_iter} rounds — raise max_iter"
+        )
+    # fixpoint: e is a union of stars (node -> component min)
+    labels = e.groupBy(F.col("u").alias("id")).agg(F.min("v").alias("comp"))
+    return (
+        verts.join(labels, "id", "left")
+        .select("id", F.coalesce("comp", F.col("id")).alias("comp"))
+    )
 
 
 _PR_SCALE = 1_000_000_000_000  # 1e12 fixed-point rank units
@@ -341,7 +286,6 @@ def pagerank_fixed(
     src: str = "src",
     dst: str = "dst",
     iterations: int = 3,
-    checkpoint_dir: str | None = None,
     weight: str | None = None,
     seeds: DataFrame | None = None,
 ) -> DataFrame:
@@ -381,120 +325,116 @@ def pagerank_fixed(
     adds no extra shuffle. Returns ``(node, d, r)`` — out-degree
     (strength when weighted) and final fixed-point rank.
 
-    Return-value contract (ADVICE r15): the returned DataFrame's
-    lineage ends in the last iteration's LAZY checkpoint, which is
-    only guaranteed to materialize once when a single action consumes
-    it before any multi-branch reuse.  All in-repo callers consume it
-    exactly once (or re-persist it themselves); a new caller that
-    fans the result into several branches of one job should persist
-    it first (``tracked_cache`` + an action, or an eager
-    checkpoint) — otherwise concurrent branches can race the lazy
-    checkpoint into re-running the final iteration (a recompute, not
-    a wrong answer: every step is deterministic integer arithmetic).
+    Return-value contract (ADVICE r15): the session's checkpoint dir
+    decides between reliable and local checkpoints.  With a dir
+    configured every checkpoint is reliable and eager.  Without one,
+    the returned DataFrame's lineage ends in the last iteration's
+    LAZY local checkpoint, which is only guaranteed to materialize
+    once when a single action consumes it before any multi-branch
+    reuse.  All in-repo callers consume it exactly once (or
+    re-persist it themselves); a new caller that fans the result into
+    several branches of one job should persist it first
+    (``tracked_cache`` + an action, or ``materialize``) — otherwise
+    concurrent branches can race the lazy checkpoint into re-running
+    the final iteration (a recompute, not a wrong answer: every step
+    is deterministic integer arithmetic).  Either way the result
+    reads tracked checkpoints: consume it before
+    ``release_tracked_caches()``.
     """
-    spark = edges.sparkSession
-    prev_dir = (
-        _set_checkpoint_dir(spark, checkpoint_dir) if checkpoint_dir is not None else None
+    cols = [F.col(src).alias("src"), F.col(dst).alias("dst")]
+    cols.append(
+        F.col(weight).cast("long").alias("w") if weight is not None
+        else F.lit(1).cast("long").alias("w")
     )
-    _persist = _round_persister(spark, checkpoint_dir)
-    try:
-        cols = [F.col(src).alias("src"), F.col(dst).alias("dst")]
-        cols.append(
-            F.col(weight).cast("long").alias("w") if weight is not None
-            else F.lit(1).cast("long").alias("w")
+    e = materialize(edges.select(*cols))
+    deg = e.groupBy(F.col("src").alias("node")).agg(
+        F.sum("w").alias("d")
+    )
+    if seeds is None:
+        nn = deg.agg(F.count(F.lit(1)).alias("n"))
+        # base: per-node constant teleport t and initial rank r
+        base = materialize(
+            deg.crossJoin(F.broadcast(nn)).select(
+                "node", "d",
+                F.expr(f"CAST({_PR_TELEPORT} AS BIGINT) div n").alias("t"),
+                F.expr(f"CAST({_PR_SCALE} AS BIGINT) div n").alias("r0"),
+            )
         )
-        e = _persist(edges.select(*cols))
-        deg = e.groupBy(F.col("src").alias("node")).agg(
-            F.sum("w").alias("d")
+    else:
+        sd = seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
+        # teleport mass divides over seeds IN THE GRAPH only: a
+        # seed with no edges can neither hold nor spread rank, so
+        # counting it would silently leak (TELEPORT div n_all)
+        # of mass per absent seed. Empty intersection is an error,
+        # not an all-zero result.
+        n_in_graph = sd.join(deg, "node", "left_semi").count()
+        if n_in_graph == 0:
+            raise ValueError(
+                "personalized PageRank: no seed appears in the edge "
+                "list — every rank would be 0/NULL; pass seeds that "
+                "exist in the graph"
+            )
+        ns = sd.join(deg, "node", "left_semi").agg(
+            F.count(F.lit(1)).alias("n")
         )
-        if seeds is None:
-            nn = deg.agg(F.count(F.lit(1)).alias("n"))
-            # base: per-node constant teleport t and initial rank r
-            base = _persist(
-                deg.crossJoin(F.broadcast(nn)).select(
-                    "node", "d",
-                    F.expr(f"CAST({_PR_TELEPORT} AS BIGINT) div n").alias("t"),
-                    F.expr(f"CAST({_PR_SCALE} AS BIGINT) div n").alias("r0"),
-                )
+        flagged = deg.join(
+            sd.withColumn("__seed", F.lit(1)), "node", "left"
+        )
+        base = materialize(
+            flagged.crossJoin(F.broadcast(ns)).select(
+                "node", "d",
+                F.expr(
+                    f"CASE WHEN __seed = 1 THEN CAST({_PR_TELEPORT} AS BIGINT) div n "
+                    "ELSE CAST(0 AS BIGINT) END"
+                ).alias("t"),
+                F.expr(
+                    f"CASE WHEN __seed = 1 THEN CAST({_PR_SCALE} AS BIGINT) div n "
+                    "ELSE CAST(0 AS BIGINT) END"
+                ).alias("r0"),
             )
-        else:
-            sd = seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
-            # teleport mass divides over seeds IN THE GRAPH only: a
-            # seed with no edges can neither hold nor spread rank, so
-            # counting it would silently leak (TELEPORT div n_all)
-            # of mass per absent seed. Empty intersection is an error,
-            # not an all-zero result.
-            n_in_graph = sd.join(deg, "node", "left_semi").count()
-            if n_in_graph == 0:
-                raise ValueError(
-                    "personalized PageRank: no seed appears in the edge "
-                    "list — every rank would be 0/NULL; pass seeds that "
-                    "exist in the graph"
-                )
-            ns = sd.join(deg, "node", "left_semi").agg(
-                F.count(F.lit(1)).alias("n")
+        )
+    ranks = base.select("node", "d", F.col("r0").alias("r"))
+    for i in range(iterations):
+        contrib = e.join(ranks, e.src == ranks.node).select(
+            F.col("dst").alias("node"), F.expr("(r * w) div d").alias("c"),
+            F.lit(None).cast("long").alias("d"),
+            F.lit(None).cast("long").alias("t"),
+        )
+        # base rides the SAME groupBy exchange as the contribution
+        # sum instead of a separate join: the old
+        # ``sums.join(base, "node")`` sort-merge re-sorted both
+        # node-keyed sides per iteration (guide §2.4 — share the
+        # exchange two same-keyed operations need).  Both ``node``
+        # key sets are unique, so inner-join semantics are exactly
+        # "present on both sides": rows missing a contribution
+        # (s IS NULL) or missing from base (d IS NULL) are dropped
+        # just as the join dropped them — bit-identical output, and
+        # the integer arithmetic is unchanged.
+        merged = contrib.unionByName(
+            base.select(
+                "node",
+                F.lit(None).cast("long").alias("c"),
+                "d", "t",
             )
-            flagged = deg.join(
-                sd.withColumn("__seed", F.lit(1)), "node", "left"
+        )
+        ranks = (
+            merged.groupBy("node")
+            .agg(
+                F.sum("c").alias("s"),
+                F.max("d").alias("d"),
+                F.max("t").alias("t"),
             )
-            base = _persist(
-                flagged.crossJoin(F.broadcast(ns)).select(
-                    "node", "d",
-                    F.expr(
-                        f"CASE WHEN __seed = 1 THEN CAST({_PR_TELEPORT} AS BIGINT) div n "
-                        "ELSE CAST(0 AS BIGINT) END"
-                    ).alias("t"),
-                    F.expr(
-                        f"CASE WHEN __seed = 1 THEN CAST({_PR_SCALE} AS BIGINT) div n "
-                        "ELSE CAST(0 AS BIGINT) END"
-                    ).alias("r0"),
-                )
+            .filter(F.col("s").isNotNull() & F.col("d").isNotNull())
+            .select(
+                "node", "d",
+                F.expr("t + (85 * s) div 100").alias("r"),
             )
-        ranks = base.select("node", "d", F.col("r0").alias("r"))
-        for i in range(iterations):
-            contrib = e.join(ranks, e.src == ranks.node).select(
-                F.col("dst").alias("node"), F.expr("(r * w) div d").alias("c"),
-                F.lit(None).cast("long").alias("d"),
-                F.lit(None).cast("long").alias("t"),
-            )
-            # base rides the SAME groupBy exchange as the contribution
-            # sum instead of a separate join: the old
-            # ``sums.join(base, "node")`` sort-merge re-sorted both
-            # node-keyed sides per iteration (guide §2.4 — share the
-            # exchange two same-keyed operations need).  Both ``node``
-            # key sets are unique, so inner-join semantics are exactly
-            # "present on both sides": rows missing a contribution
-            # (s IS NULL) or missing from base (d IS NULL) are dropped
-            # just as the join dropped them — bit-identical output, and
-            # the integer arithmetic is unchanged.
-            merged = contrib.unionByName(
-                base.select(
-                    "node",
-                    F.lit(None).cast("long").alias("c"),
-                    "d", "t",
-                )
-            )
-            ranks = (
-                merged.groupBy("node")
-                .agg(
-                    F.sum("c").alias("s"),
-                    F.max("d").alias("d"),
-                    F.max("t").alias("t"),
-                )
-                .filter(F.col("s").isNotNull() & F.col("d").isNotNull())
-                .select(
-                    "node", "d",
-                    F.expr("t + (85 * s) div 100").alias("r"),
-                )
-            )
-            if i < iterations - 1:
-                # lazy: each iteration's rank table has exactly ONE
-                # consumer (the next iteration's contribution join),
-                # so the checkpoint can materialize inside that job —
-                # the logical plan still truncates at the call, the
-                # per-iteration materialization job disappears
-                ranks = _persist(ranks, eager=False)
-        return ranks
-    finally:
-        if prev_dir is not None:
-            spark.sparkContext.setCheckpointDir(prev_dir)
+        )
+        if i < iterations - 1:
+            # lazy: each iteration's rank table has exactly ONE
+            # consumer (the next iteration's contribution join),
+            # so the checkpoint can materialize inside that job —
+            # the logical plan still truncates at the call, the
+            # per-iteration materialization job disappears
+            ranks = materialize(ranks, eager=False)
+    return ranks

@@ -15,14 +15,17 @@ format in this environment, the same cost shape is achieved with:
 On a cluster with Delta/Iceberg the bucket bookkeeping collapses into
 ``MERGE INTO`` — the surrounding interface is unchanged.
 
-The merged batch is materialized (localCheckpoint) before the write:
-dynamic overwrite deletes the very files the plan would lazily read.
+The merged batch is materialized before the write, and released
+before returning: dynamic overwrite deletes the very files the plan
+would lazily read.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from wire_spark.queries._util import materialize, release_tracked_caches
 
 BUCKET_COL = "__bucket"
 # Bucket-count marker: an EMPTY underscore-prefixed sibling file whose
@@ -146,25 +149,29 @@ def merge_upsert(
     if delete_keys is not None:
         replaced_keys = replaced_keys.union(delete_keys.select(key))
     kept = target.join(replaced_keys.distinct(), key, "left_anti")
-    merged = kept.unionByName(up).localCheckpoint(eager=True)
+    # freed before returning: a stream merges once per micro-batch
+    merged = materialize(kept.unionByName(up))
+    try:
+        # per-write dynamic overwrite: only partitions present in
+        # `merged` are replaced, and the session-wide conf is left
+        # untouched for unrelated writes.  Repartition on the bucket
+        # column first so each rewritten bucket lands as ONE file (see
+        # write_initial) — without it every task holding rows for a
+        # bucket emits a file, and the bucket-pruned reads this layout
+        # exists for pay an open/footer cost per file on every
+        # subsequent merge and search.
+        (merged.repartition(max(1, len(touched)), F.col(BUCKET_COL))
+         .write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy(BUCKET_COL).parquet(path))
 
-    # per-write dynamic overwrite: only partitions present in `merged`
-    # are replaced, and the session-wide conf is left untouched for
-    # unrelated writes.  Repartition on the bucket column first so
-    # each rewritten bucket lands as ONE file (see write_initial) —
-    # without it every task holding rows for a bucket emits a file,
-    # and the bucket-pruned reads this layout exists for pay an
-    # open/footer cost per file on every subsequent merge and search.
-    (merged.repartition(max(1, len(touched)), F.col(BUCKET_COL))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy(BUCKET_COL).parquet(path))
-
-    # a batch that deletes EVERY key in a touched bucket leaves no row
-    # for that bucket in `merged`, so dynamic overwrite never rewrites
-    # it — clear those partition directories explicitly or the deleted
-    # keys stay visible.
-    present = {r[BUCKET_COL] for r in merged.select(BUCKET_COL).distinct().collect()}
+        # a batch that deletes EVERY key in a touched bucket leaves no
+        # row for that bucket in `merged`, so dynamic overwrite never
+        # rewrites it — clear those partition directories explicitly
+        # or the deleted keys stay visible.
+        present = {r[BUCKET_COL] for r in merged.select(BUCKET_COL).distinct().collect()}
+    finally:
+        release_tracked_caches(merged)
     emptied = [b for b in touched if b not in present]
     if emptied:
         hconf = spark._jsc.hadoopConfiguration()

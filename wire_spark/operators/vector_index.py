@@ -369,6 +369,7 @@ def merge_index_update(spark: SparkSession, path: str,
     partitions."""
     from wire_spark.operators.upsert import (
         BUCKET_COL, _with_bucket, merge_upsert, stored_bucket_count)
+    from wire_spark.queries._util import materialize, release_tracked_caches
     from wire_spark.transforms.cdc import _UPSERTS
 
     cells_path = os.path.join(path, "cells")
@@ -385,67 +386,73 @@ def merge_index_update(spark: SparkSession, path: str,
     # lookup, live re-assignment, new-cid collect, tombstone side);
     # left lazy, each re-executes the CDC fold window over the log —
     # materialize once, bounded O(|distinct keys touched|) by the
-    # fold's definition
-    delta = delta.localCheckpoint(eager=True)
-    touched = delta.select("vec_id").distinct()
-    # old cid of every touched key: bucket-pruned reverse-index read
-    tb = _with_bucket(touched, "vec_id", n_buckets)
-    tbuckets = [r[BUCKET_COL] for r in tb.select(BUCKET_COL).distinct().collect()]
-    old_cids = {
-        r.cid
-        for r in spark.read.parquet(cells_path)
-        .filter(F.col(BUCKET_COL).isin(tbuckets))
-        .join(touched, "vec_id")
-        .select("cid").distinct().collect()
-    }
+    # fold's definition.  Every checkpoint taken here is freed before
+    # returning: a stream calls this once per micro-batch.
+    delta = materialize(delta)
+    assigned = merged = None
+    try:
+        touched = delta.select("vec_id").distinct()
+        # old cid of every touched key: bucket-pruned reverse-index read
+        tb = _with_bucket(touched, "vec_id", n_buckets)
+        tbuckets = [r[BUCKET_COL] for r in tb.select(BUCKET_COL).distinct().collect()]
+        old_cids = {
+            r.cid
+            for r in spark.read.parquet(cells_path)
+            .filter(F.col(BUCKET_COL).isin(tbuckets))
+            .join(touched, "vec_id")
+            .select("cid").distinct().collect()
+        }
 
-    # NULL-payload upserts route to the delete side (update_cells
-    # docstring: a vector we cannot assign must not be guessed into
-    # cell 0 — it re-enters on the next payload-bearing change)
-    live = delta.filter(
-        F.col("op").isin(*_UPSERTS) & F.col("v").isNotNull()
-    ).select("vec_id", "v")
-    # assigned feeds the codes union, the new-cid collect, AND the
-    # cells merge — materialize the |delta|-row assignment once
-    assigned = assign_cells(live, cent).localCheckpoint(eager=True)
-    new_codes = pq_encode(live, cw).join(assigned, "vec_id")
-    new_cids = {r.cid for r in assigned.select("cid").distinct().collect()}
-    affected = sorted(old_cids | new_cids)
+        # NULL-payload upserts route to the delete side (update_cells
+        # docstring: a vector we cannot assign must not be guessed into
+        # cell 0 — it re-enters on the next payload-bearing change)
+        live = delta.filter(
+            F.col("op").isin(*_UPSERTS) & F.col("v").isNotNull()
+        ).select("vec_id", "v")
+        # assigned feeds the codes union, the new-cid collect, AND the
+        # cells merge — materialize the |delta|-row assignment once
+        assigned = materialize(assign_cells(live, cent))
+        new_codes = pq_encode(live, cw).join(assigned, "vec_id")
+        new_cids = {r.cid for r in assigned.select("cid").distinct().collect()}
+        affected = sorted(old_cids | new_cids)
 
-    if affected:
-        target = spark.read.parquet(codes_path).filter(
-            F.col("cid").isin(affected))
-        kept = target.join(touched, "vec_id", "left_anti")
-        merged = (
-            kept.select("vec_id", "m", "code", "cid")
-            .unionByName(new_codes.select("vec_id", "m", "code", "cid"))
-            .localCheckpoint(eager=True)  # upsert.py lesson: dynamic
-            # overwrite deletes the files a lazy plan would re-read
-        )
-        # one file per rewritten cid partition (upsert.py small-files
-        # rule): the searches this layout serves read whole cid
-        # partitions and pay an open/footer cost per file
-        (merged.repartition(max(1, len(affected)), F.col("cid"))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("cid").parquet(codes_path))
-        # a cid whose every key was deleted leaves no row in `merged`
-        # — dynamic overwrite never rewrites it; clear explicitly
-        present = {r.cid for r in merged.select("cid").distinct().collect()}
-        emptied = [c for c in affected if c not in present]
-        if emptied:
-            hconf = spark._jsc.hadoopConfiguration()
-            for c in emptied:
-                p = spark._jvm.org.apache.hadoop.fs.Path(
-                    f"{codes_path}/cid={c}")
-                p.getFileSystem(hconf).delete(p, True)
+        if affected:
+            target = spark.read.parquet(codes_path).filter(
+                F.col("cid").isin(affected))
+            kept = target.join(touched, "vec_id", "left_anti")
+            # upsert.py lesson: dynamic overwrite deletes the files a lazy
+            # plan would re-read
+            merged = materialize(
+                kept.select("vec_id", "m", "code", "cid")
+                .unionByName(new_codes.select("vec_id", "m", "code", "cid"))
+            )
+            # one file per rewritten cid partition (upsert.py small-files
+            # rule): the searches this layout serves read whole cid
+            # partitions and pay an open/footer cost per file
+            (merged.repartition(max(1, len(affected)), F.col("cid"))
+             .write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy("cid").parquet(codes_path))
+            # a cid whose every key was deleted leaves no row in `merged`
+            # — dynamic overwrite never rewrites it; clear explicitly
+            present = {r.cid for r in merged.select("cid").distinct().collect()}
+            emptied = [c for c in affected if c not in present]
+            if emptied:
+                hconf = spark._jsc.hadoopConfiguration()
+                for c in emptied:
+                    p = spark._jvm.org.apache.hadoop.fs.Path(
+                        f"{codes_path}/cid={c}")
+                    p.getFileSystem(hconf).delete(p, True)
 
-    dead = delta.filter(
-        ~F.col("op").isin(*_UPSERTS) | F.col("v").isNull()
-    ).select("vec_id")
-    merge_upsert(spark, cells_path, assigned, "vec_id",
-                 n_buckets=n_buckets, delete_keys=dead)
-    return len(affected)
+        dead = delta.filter(
+            ~F.col("op").isin(*_UPSERTS) | F.col("v").isNull()
+        ).select("vec_id")
+        merge_upsert(spark, cells_path, assigned, "vec_id",
+                     n_buckets=n_buckets, delete_keys=dead)
+        return len(affected)
+    finally:
+        release_tracked_caches(
+            *(d for d in (delta, assigned, merged) if d is not None))
 
 
 # --------------------------------------------------------------------

@@ -123,24 +123,3 @@ def compare_query(
         oracle_rows=len(oracle_rows),
         issues=issues,
     )
-
-
-def compare_all(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
-    from wire_spark.catalog import load_registry
-
-    registry = load_registry()
-    con = duckdb_connection(sf_dir)
-    results = []
-    for name, q in registry.items():
-        if names and name not in names:
-            continue
-        if q.oracle is None:
-            continue
-        try:
-            results.append(compare_query(spark, con, name, q.fn, q.oracle, sf_dir))
-        except Exception as e:  # surface, don't abort the sweep
-            results.append(
-                CompareResult(name=name, ok=False, spark_rows=-1, oracle_rows=-1,
-                              issues=[f"exception: {type(e).__name__}: {e}"])
-            )
-    return results

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import threading
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -133,17 +136,19 @@ def events_moment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: DataFrames cached by catalog queries, awaiting release.  Catalog
-#: functions are lazy (the caller runs the action), so a query cannot
-#: unpersist its own cache — instead every ``.cache()`` inside a
-#: catalog query goes through :func:`tracked_cache` and long-lived
-#: callers (bench.py, the CLI, the serve path) call
+#: Intermediate results kept by catalog queries and the operators
+#: they call, awaiting release, as ``(DataFrame, free)`` pairs: caches
+#: from :func:`tracked_cache` and checkpoints from :func:`materialize`.
+#: Catalog functions are lazy (the caller runs the action), so a query
+#: cannot release its own intermediates — long-lived callers
+#: (bench.py, the CLI, the serve path, the oracle tests) call
 #: :func:`release_tracked_caches` once their actions complete.
 #: Without this, a session that runs many queries (or the same query
 #: across different sf_dirs — distinct plans, distinct cache entries)
 #: pins executor storage memory indefinitely (ADVICE r8,
 #: tcloseness_audit).
-_TRACKED_CACHES: list[DataFrame] = []
+_TRACKED: list[tuple[DataFrame, Callable[[], object]]] = []
+_TRACKED_LOCK = threading.Lock()
 
 
 def tracked_cache(df: DataFrame) -> DataFrame:
@@ -156,22 +161,60 @@ def tracked_cache(df: DataFrame) -> DataFrame:
     (VERDICT r15 #3): cross-QUERY cache hits make per-query seconds
     depend on execution order, so the caches are scoped to the query
     that built them and the honest cost is paid by every consumer.
+    Unlike a checkpoint, a cache keeps its lineage: lost blocks (an
+    executor died, or the cache was released) are recomputed.
     """
-    _TRACKED_CACHES.append(df)
+    with _TRACKED_LOCK:
+        _TRACKED.append((df, df.unpersist))
     return df.cache()
 
 
-def release_tracked_caches() -> int:
-    """Unpersist every tracked cache; returns how many were released.
+def materialize(df: DataFrame, *, eager: bool = True) -> DataFrame:
+    """Truncate ``df``'s lineage at its computed rows, tracked for
+    release like :func:`tracked_cache`.
 
-    Safe to call while the DataFrames are still referenced — unpersist
-    only evicts the materialized blocks; any later action simply
-    recomputes."""
+    The session decides where the rows live: when the SparkContext
+    has a checkpoint dir (a cluster), a reliable ``checkpoint`` into
+    it, which survives executor loss; otherwise an executor-local
+    ``localCheckpoint``.
+
+    ``eager=False`` fuses the materialization into the caller's next
+    action: one job instead of two.  Only valid when exactly one
+    action follows before multi-branch reuse: a lazy checkpoint
+    consumed by two branches of one job races both branches into the
+    cache and can compute the rows twice.  Reliable checkpoints stay
+    eager always: RDD ``checkpoint()`` recomputes the lineage when
+    the checkpoint job runs unless the data was already materialized,
+    so a lazy reliable checkpoint would run the plan twice.
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        out = df.checkpoint(eager=True)
+    else:
+        out = df.localCheckpoint(eager=eager)
+    rdd = out._jdf.queryExecution().analyzed().rdd()  # the LogicalRDD's rows
+    with _TRACKED_LOCK:
+        _TRACKED.append((out, lambda: rdd.unpersist(False)))
+    return out
+
+
+def release_tracked_caches(*dfs: DataFrame) -> int:
+    """Free tracked caches and checkpoints; returns how many were
+    released.  With no arguments every tracked result is freed; with
+    DataFrames only those (an operator that owns its intermediates
+    from start to end, like ``merge_upsert``).
+
+    Call it only after the last action on anything built from them.
+    A released cache is merely evicted (a later action recomputes
+    it), but a released checkpoint cannot be re-read: its lineage was
+    truncated, so a later action on a DataFrame built from it fails."""
+    ids = {id(d) for d in dfs}
+    with _TRACKED_LOCK:
+        taken = [t for t in _TRACKED if not dfs or id(t[0]) in ids]
+        _TRACKED[:] = [t for t in _TRACKED if dfs and id(t[0]) not in ids]
     n = 0
-    while _TRACKED_CACHES:
-        df = _TRACKED_CACHES.pop()
+    for _, free in reversed(taken):
         try:
-            df.unpersist()
+            free()
             n += 1
         except Exception:
             pass  # session already stopped — nothing to release

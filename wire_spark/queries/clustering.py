@@ -18,7 +18,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from wire_spark.catalog import register
-from wire_spark.queries._util import T, t6
+from wire_spark.queries._util import T, materialize, t6
 
 _K = 8
 _DIM = 64
@@ -163,7 +163,7 @@ def kmeans_lloyd_round(spark, sf_dir):
     # cent1 is an 8-row relation feeding TWO consumers (the broadcast
     # assignment and the census join); its upstream is a full Lloyd
     # pass over the vector table — materialize once
-    cent1 = lloyd_cent1(spark, sf_dir).localCheckpoint(eager=True)
+    cent1 = materialize(lloyd_cent1(spark, sf_dir))
     assign1 = _argmin_assign(e, cent1, keep_v=False).select("vec_id", "cid")
     def dot(a):
         return F.aggregate(F.zip_with(a, a, lambda x, y: x * y), F.lit(0.0), lambda p, q: p + q)
@@ -243,8 +243,8 @@ def kmeans_lloyd_two_rounds(spark, sf_dir):
     # consumers (broadcast assignment + census join) with a two-full-
     # Lloyd-pass upstream — materialize each round's centroids so no
     # refine pass executes twice
-    cent1 = _lloyd_refine(e, cent0).localCheckpoint(eager=True)
-    cent2 = _lloyd_refine(e, cent1).localCheckpoint(eager=True)
+    cent1 = materialize(_lloyd_refine(e, cent0))
+    cent2 = materialize(_lloyd_refine(e, cent1))
     assign2 = _argmin_assign(e, cent2, keep_v=False).select("vec_id", "cid")
 
     def dot(a):

@@ -87,18 +87,18 @@ ORDER BY d1, d2
 """
 
 
-def _shingle_df(spark, sf_dir, cache: bool = True):
-    """(doc_id, shingle) exploded pairs.
+def _shingle_df(spark, sf_dir):
+    """(doc_id, shingle) exploded pairs, cached.
 
-    Cached by default: every dedup query reuses this relation on both
-    sides of a self-join, and without persistence Spark re-derives it
-    from the parquet scan per branch. On a cluster the equivalent is
+    Every dedup query reuses this relation on both sides of a
+    self-join, and without persistence Spark re-derives it from the
+    parquet scan per branch. On a cluster the equivalent is
     persisting (or checkpointing) the shingle/signature table before
     the LSH join — a standard pattern for multi-pass dedup.
     """
     d = T(spark, sf_dir, "documents")
     sh = d.select("doc_id", F.explode(word_shingles("text", 3)).alias("shingle"))
-    return tracked_cache(sh) if cache else sh
+    return tracked_cache(sh)
 
 
 def _jaccard_pairs(spark, sf_dir, threshold: float, df_cap: int | None = 1000,

@@ -15,7 +15,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from wire_spark.catalog import register
-from wire_spark.queries._util import EVENTS_SANITIZED_CTE, EVENTS_TIMED_CTE, T, events_sane, events_timed
+from wire_spark.queries._util import EVENTS_SANITIZED_CTE, EVENTS_TIMED_CTE, T, events_sane, events_timed, materialize
 
 _SKEW_ORACLE = """
 WITH per_key AS (
@@ -201,9 +201,9 @@ def robust_outliers_mad(spark, sf_dir):
     # eager materialization (the preference_bt_strength convention)
     # stops Spark from re-executing that pass per consumer (med: the
     # deviation join, the mm join; mm: the outlier scan, the output).
-    med = _exact_median(ev, "value").select(
+    med = materialize(_exact_median(ev, "value").select(
         "event_type", F.col("n").alias("n_events"), F.col("m").alias("med")
-    ).localCheckpoint(eager=True)
+    ))
     dev = ev.join(F.broadcast(med.select("event_type", "med")), "event_type").select(
         "event_type", "event_id",
         F.abs(F.col("value") - F.col("med")).alias("d"),
@@ -211,7 +211,7 @@ def robust_outliers_mad(spark, sf_dir):
     mad = _exact_median(dev, "d").select(
         "event_type", F.col("m").alias("mad")
     )
-    mm = med.join(mad, "event_type").localCheckpoint(eager=True)
+    mm = materialize(med.join(mad, "event_type"))
     outl = (
         ev.join(F.broadcast(mm.select("event_type", "med", "mad")), "event_type")
         .filter(F.abs(F.col("value") - F.col("med")) > F.lit(3) * F.col("mad"))
@@ -255,11 +255,11 @@ def robust_outliers_mad_bucketed(spark, sf_dir):
     # pass (only the cumulative histogram is cached inside
     # bucketed_quantiles) — materialize once per tier, the same
     # discipline as the sort-based sibling
-    med = (
+    med = materialize(
         bucketed_quantiles(ev, (0.5,))
         .select("event_type", F.col("n").alias("n_events"),
                 F.col("v").alias("med"))
-    ).localCheckpoint(eager=True)
+    )
     dev = ev.join(F.broadcast(med.select("event_type", "med")), "event_type").select(
         "event_type", "event_id",
         F.abs(F.col("value") - F.col("med")).alias("value"),
@@ -268,7 +268,7 @@ def robust_outliers_mad_bucketed(spark, sf_dir):
         bucketed_quantiles(dev, (0.5,))
         .select("event_type", F.col("v").alias("mad"))
     )
-    mm = med.join(mad, "event_type").localCheckpoint(eager=True)
+    mm = materialize(med.join(mad, "event_type"))
     outl = (
         ev.join(F.broadcast(mm.select("event_type", "med", "mad")), "event_type")
         .filter(F.abs(F.col("value") - F.col("med")) > F.lit(3) * F.col("mad"))
@@ -741,14 +741,13 @@ def events_leadlag_xcorr(spark, sf_dir):
     bit-reproducible with a total (score, lag) tiebreak.
     """
     e = T(spark, sf_dir, "events")
-    hourly = (
+    hourly = materialize(  # probe + build sides share it
         e.groupBy(F.date_trunc("hour", F.col("ts")).alias("hr"))
         .agg(
             F.count(F.when(F.col("event_type") == "click", 1)).alias("x"),
             F.count(F.when(F.col("event_type") == "purchase", 1)).alias("y"),
         )
         .withColumn("hi", F.expr("unix_micros(hr) div 3600000000"))
-        .localCheckpoint(eager=True)  # probe + build sides share it
     )
     lags = spark.range(-3, 4).select(F.col("id").cast("long").alias("lag"))
     a = hourly.select("hi", "x").crossJoin(F.broadcast(lags)).select(
@@ -839,10 +838,10 @@ def supplier_return_pchart(spark, sf_dir):
     # eagerly materialized: both the corpus-total aggregate and the
     # scoring branch consume this supplier-grain relation — without
     # the checkpoint each branch would rescan lineitem
-    s = li.groupBy(F.col("l_suppkey").alias("suppkey")).agg(
+    s = materialize(li.groupBy(F.col("l_suppkey").alias("suppkey")).agg(
         F.count(F.lit(1)).alias("n_items"),
         F.count(F.when(F.col("l_returnflag") == "R", 1)).alias("n_returns"),
-    ).localCheckpoint(eager=True)
+    ))
     tot = s.agg(F.sum("n_items").alias("nn"), F.sum("n_returns").alias("rr"))
     dev = "CAST(n_returns * nn - rr * n_items AS DECIMAL(19,0))"
     var = ("CAST(rr AS DECIMAL(19,0)) * CAST(nn - rr AS DECIMAL(19,0)) "

@@ -645,11 +645,11 @@ def events_survival_hazard(spark, sf_dir):
     mx = e.agg(F.max("eu").alias("m"))
     # user-grain, consumed by both the first-purchase join and the
     # censoring rollup — materialize once.  tracked_cache, not
-    # localCheckpoint: this relation is DATA-sized (one row per
-    # signup user), and a bare localCheckpoint pins it in executor
-    # storage with no lineage to recover from executor loss on a real
-    # cluster (ADVICE r15) — the cache keeps the lineage and is
-    # released by the bench/CLI after the query's actions complete.
+    # materialize: this relation is DATA-sized (one row per signup
+    # user), and a local checkpoint keeps no lineage to recover from
+    # executor loss on a real cluster (ADVICE r15) — the cache keeps
+    # the lineage and is released by the bench/CLI after the query's
+    # actions complete.
     # The count() materializes it eagerly so the two consumers below
     # (which fan out inside one job) never race the lazy cache into
     # recomputing the aggregation.
@@ -666,7 +666,7 @@ def events_survival_hazard(spark, sf_dir):
     # two narrow columns per signup user, consumed by THREE
     # aggregations (end_hist / ev_hist / dmax) — materialized once so
     # the purchase join does not re-execute per consumer.  Same
-    # tracked_cache-not-localCheckpoint rationale as `s` (data-sized,
+    # tracked_cache-not-materialize rationale as `s` (data-sized,
     # cluster-recoverable); eager count() because the two histogram
     # consumers are BroadcastExchange builds the driver launches
     # concurrently — a lazy cache would race them into recomputing

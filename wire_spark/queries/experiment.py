@@ -36,7 +36,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from wire_spark.catalog import register
-from wire_spark.queries._util import EVENTS_MOMENT_CTE, EVENTS_SANITIZED_CTE, EVENTS_TIMED_CTE, T, events_moment, events_sane, events_timed, md5_long
+from wire_spark.queries._util import EVENTS_MOMENT_CTE, EVENTS_SANITIZED_CTE, EVENTS_TIMED_CTE, T, events_moment, events_sane, events_timed, materialize, md5_long
 from wire_spark.queries.features import _hist_prefix
 
 # --------------------------------------------------------------------
@@ -1002,9 +1002,8 @@ def experiment_ipw_ate(spark, sf_dir):
         .alias("sy0"),
     )
     # the stratum relation is <= 9 rows and feeds three branches;
-    # localCheckpoint (eager) materializes it once, the
-    # basket_brand_pairs idiom
-    s = s.localCheckpoint(eager=True)
+    # materialize it once, the basket_brand_pairs idiom
+    s = materialize(s)
     sd = s.select(
         "stratum", "n_users", "n_treated",
         F.expr(

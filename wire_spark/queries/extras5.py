@@ -12,7 +12,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from wire_spark.catalog import register
-from wire_spark.queries._util import EVENTS_MOMENT_CTE, EVENTS_SANITIZED_CTE, EVENTS_TIMED_CTE, T, events_moment, events_sane, events_timed
+from wire_spark.queries._util import EVENTS_MOMENT_CTE, EVENTS_SANITIZED_CTE, EVENTS_TIMED_CTE, T, events_moment, events_sane, events_timed, materialize
 
 # --------------------------------------------------------------------
 # band join: order pairs within 7 days of each other (bucket-blocked)
@@ -780,10 +780,9 @@ def embedding_power_iteration(spark, sf_dir):
     # matrix-vector products) would otherwise each re-run the Python
     # gram partials over the full embedding table; the checkpoint is
     # dimension^2 rows
-    A = (
+    A = materialize(
         e.mapInPandas(gram_full, "i LONG, j LONG, v LONG")
         .groupBy("i", "j").agg(F.sum("v").alias("v"))
-        .localCheckpoint(eager=True)
     )
     v0 = A.filter(F.col("i") == F.col("j")).select("i", F.col("v").alias("x"))
     # matrix-vector products accumulate in DECIMAL(38,0) (the r12
@@ -1027,12 +1026,11 @@ def revenue_concentration_gini(spark, sf_dir):
     form). Revenue is exact integer cents; the single Gini division
     runs on exact BIGINTs with a deterministic floor.
     """
-    rev = (
+    rev = materialize(  # histogram + rank branches share it
         T(spark, sf_dir, "orders")
         .groupBy(F.col("o_custkey").alias("custkey"))
         .agg(F.sum(F.expr("CAST(floor(o_totalprice * 100.0) AS BIGINT)"))
              .alias("r"))
-        .localCheckpoint(eager=True)  # histogram + rank branches share it
     )
     bkt = F.expr("r div 10000000")  # 100k-currency buckets, ~1k buckets
     ev = rev.withColumn("bkt", bkt)
@@ -1130,12 +1128,13 @@ def customer_rfm_segments(spark, sf_dir):
     per dimension. The segment rollup is a 125-group aggregate.
     """
     o = T(spark, sf_dir, "orders")
-    base = o.groupBy(F.col("o_custkey").alias("custkey")).agg(
+    # totals + three rankings share it
+    base = materialize(o.groupBy(F.col("o_custkey").alias("custkey")).agg(
         F.count(F.lit(1)).alias("f"),
         F.sum(F.expr("CAST(floor(o_totalprice * 100.0) AS BIGINT)")).alias("m"),
         F.expr("max(unix_micros(o_orderdate)) div 86400000000")
         .alias("last_day"),
-    ).localCheckpoint(eager=True)  # totals + three rankings share it
+    ))
     mx = base.agg(F.max("last_day").alias("today"),
                   F.count(F.lit(1)).alias("n"))
     scored = (

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from wire_spark.catalog import register
 from wire_spark.queries.dedup import _SHINGLES_CTE, _jaccard_pairs
-from wire_spark.queries._util import tracked_cache
+from wire_spark.queries._util import materialize, tracked_cache
 
 _SCALE = 1_000_000_000_000  # 1e12 fixed-point rank units
 _TELEPORT = _SCALE * 15 // 100  # exact: 150_000_000_000
@@ -398,10 +398,7 @@ def graph_triangle_count(spark, sf_dir):
     # closing-edge probe) fan out from this relation, and a lazy cache
     # races — concurrent branches of the same job can each recompute
     # the expensive shingle join before the cache is populated
-    pairs = (
-        _jaccard_pairs(spark, sf_dir, 0.8).select("d1", "d2")
-        .localCheckpoint(eager=True)
-    )
+    pairs = materialize(_jaccard_pairs(spark, sf_dir, 0.8).select("d1", "d2"))
     ed = pairs.union(pairs.select(F.col("d2").alias("d1"),
                                   F.col("d1").alias("d2")))
     deg = ed.groupBy(F.col("d1").alias("node")).agg(
@@ -413,13 +410,14 @@ def graph_triangle_count(spark, sf_dir):
     )
     fwd = (F.col("deg1") < F.col("deg2")) | (
         (F.col("deg1") == F.col("deg2")) & (F.col("d1") < F.col("d2")))
-    oriented = p.select(
+    # node-sized; wedge join reads it twice
+    oriented = materialize(p.select(
         F.when(fwd, F.col("d1")).otherwise(F.col("d2")).alias("src"),
         F.when(fwd, F.col("d2")).otherwise(F.col("d1")).alias("dst"),
         # carry the head's orientation key so the wedge join can order
         # its two heads without re-joining degrees
         F.when(fwd, F.col("deg2")).otherwise(F.col("deg1")).alias("ddst"),
-    ).localCheckpoint(eager=True)  # node-sized; wedge join reads it twice
+    ))
     e1, e2 = oriented.alias("e1"), oriented.alias("e2")
     wedges = e1.join(
         e2,
@@ -640,14 +638,11 @@ def graph_kcore_peel(spark, sf_dir):
     exactly. Scale shape: each round is one degree groupBy plus two
     semi-join-shaped filters, all keyed on the node id — cost
     shrinks monotonically with the surviving edge set, and lineage
-    is truncated per round (localCheckpoint) exactly like the other
+    is truncated per round (``materialize``) exactly like the other
     iterative operators; a production run would loop until the
     deleted count hits zero instead of a fixed 3 rounds.
     """
-    edges = (
-        _jaccard_pairs(spark, sf_dir, 0.8).select("d1", "d2")
-        .localCheckpoint(eager=True)
-    )
+    edges = materialize(_jaccard_pairs(spark, sf_dir, 0.8).select("d1", "d2"))
     e = edges.union(edges.select(F.col("d2").alias("d1"),
                                  F.col("d1").alias("d2"))) \
         .select(F.col("d1").alias("a"), F.col("d2").alias("b"))
@@ -663,12 +658,11 @@ def graph_kcore_peel(spark, sf_dir):
     # keyed like the aggregation shares its exchange).
     w_a, w_b = W.partitionBy("a"), W.partitionBy("b")
     for _ in range(3):
-        e = (
+        e = materialize(  # per-round lineage truncation
             e.withColumn("da", F.count(F.lit(1)).over(w_a))
             .withColumn("db", F.count(F.lit(1)).over(w_b))
             .filter((F.col("da") >= 2) & (F.col("db") >= 2))
             .select("a", "b")
-            .localCheckpoint(eager=True)  # per-round lineage truncation
         )
     final = e.groupBy(F.col("a").alias("doc_id")).agg(
         F.count(F.lit(1)).alias("core_degree"))

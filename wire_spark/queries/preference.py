@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from wire_spark.catalog import register
-from wire_spark.queries._util import T
+from wire_spark.queries._util import T, materialize
 
 # Shared contest derivation: (order, brand) revenue in integer cents,
 # then per-order brand-vs-brand contests with the higher revenue
@@ -73,7 +73,7 @@ def _pair_relation(spark, sf_dir):
     aggregation's clustering (subset rule), the contest self-join
     reads both branches from ONE ReusedExchange, and the join itself
     needs no further shuffle (guide §2.4).  This replaced the r15
-    ``localCheckpoint(eager=True)`` form — measured interleaved A/B
+    eager local-checkpoint form — measured interleaved A/B
     at sf0.1: ~1.62 s -> ~1.12 s steady-state (OPTIMIZATION_r16.md
     §5), identical output — and removes a DATA-SIZED localCheckpoint
     (executor-pinned, no reliable-checkpoint fallback: the ADVICE
@@ -223,7 +223,7 @@ def preference_bt_strength(spark, sf_dir):
     # pair is <= C(25,2) rows and feeds FIVE downstream references
     # (two union orientations, consumed by bs and den); materialize
     # once rather than re-running the contest self-join per branch
-    pair = _pair_relation(spark, sf_dir).localCheckpoint(eager=True)
+    pair = materialize(_pair_relation(spark, sf_dir))
     edges = pair.select(
         F.col("b1").alias("i"), F.col("b2").alias("j"), "n",
         F.col("w1").alias("w"),

@@ -23,7 +23,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from wire_spark.catalog import register
-from wire_spark.queries._util import T, r4, t6
+from wire_spark.queries._util import T, materialize, r4, t6
 
 _COS = """list_dot_product(a.v, b.v)
       / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)))"""
@@ -344,9 +344,9 @@ def ann_ivf_lloyd_cosine(spark, sf_dir):
     # assignment and the probe pass — materialized once so the Lloyd
     # refinement (a full pass over the vector table) does not execute
     # per consumer
-    cent = lloyd_cent1(spark, sf_dir).withColumn(
+    cent = materialize(lloyd_cent1(spark, sf_dir).withColumn(
         "cn", F.sqrt(_dot(F.col("cv"), F.col("cv")))
-    ).localCheckpoint(eager=True)
+    ))
     sim_c = t6(_dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("cn")))
     w_assign = W.partitionBy("vec_id").orderBy(F.desc("csim"), F.asc("cid"))
     assign = (

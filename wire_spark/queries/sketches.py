@@ -26,7 +26,8 @@ from pyspark.sql import functions as F
 
 from wire_spark.catalog import register
 from wire_spark.queries._util import (EVENTS_SANITIZED_CTE, T, events_sane,
-                                      local_df, md5_long, tracked_cache)
+                                      local_df, materialize, md5_long,
+                                      tracked_cache)
 
 # --------------------------------------------------------------------
 # HyperLogLog distinct sketch (m=256 registers, deterministic)
@@ -896,9 +897,8 @@ def sketch_selfjoin_size(spark, sf_dir):
     the oracle-checkable special case. Integer end-to-end.
     """
     e = T(spark, sf_dir, "events")
-    counts = e.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("c")
-    ).localCheckpoint(eager=True)  # exact-F2 + sketch branches share it
+    # exact-F2 + sketch branches share it
+    counts = materialize(e.groupBy("user_id").agg(F.count(F.lit(1)).alias("c")))
     exact = counts.agg(F.sum(F.col("c") * F.col("c")).alias("exact_f2"))
     depths = spark.range(_F2_D).select(F.col("id").cast("int").alias("d"))
     cells = (

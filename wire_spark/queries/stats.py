@@ -42,6 +42,7 @@ from wire_spark.queries._util import (
     events_moment,
     events_sane,
     local_df,
+    materialize,
     md5_long,
 )
 from wire_spark.queries.features import _hist_prefix
@@ -1154,7 +1155,7 @@ def events_permutation_test(spark, sf_dir):
     # st is B+1 = 33 rows but feeds TWO consumers (the b=0 observed
     # slice and the permutation count); materialized once so the
     # user-grain explode/aggregate pipeline does not execute twice
-    st = s.select(
+    st = materialize(s.select(
         "b",
         F.expr(
             "CASE WHEN e1 > 0 AND e2 > 0 THEN"
@@ -1162,7 +1163,7 @@ def events_permutation_test(spark, sf_dir):
             " - CAST(c2 AS DOUBLE) / CAST(e2 AS DOUBLE))"
             " ELSE 0.0e0 END"
         ).alias("stat"),
-    ).localCheckpoint(eager=True)
+    ))
     obs = st.filter(F.col("b") == 0).select(F.col("stat").alias("stat_obs"))
     return (
         st.crossJoin(F.broadcast(obs))
