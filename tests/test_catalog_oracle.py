@@ -1,6 +1,6 @@
 """The main correctness gate: every catalog query with an oracle must
 match DuckDB at sf0.001 and again at sf0.01, on row count, schema and
-values."""
+values, and its sf0.001 plan must hold no CartesianProduct."""
 
 from __future__ import annotations
 
@@ -10,6 +10,7 @@ import pytest
 
 from wire_spark.catalog import load_registry
 from wire_spark.oracle import compare_query, duckdb_connection
+from wire_spark.plans import formatted_plan
 from wire_spark.queries._util import release_tracked_caches
 
 REGISTRY = load_registry()
@@ -24,8 +25,18 @@ def con(sf_dir):
 @pytest.mark.parametrize("name", _WITH_ORACLE)
 def test_oracle_parity(spark, con, sf_dir, name):
     q = REGISTRY[name]
-    res = compare_query(spark, con, name, q.fn, q.oracle, sf_dir)
+    built = []
+
+    def build(spark, sf_dir):
+        built.append(q.fn(spark, sf_dir))
+        return built[-1]
+
+    res = compare_query(spark, con, name, build, q.oracle, sf_dir)
     assert res.ok, str(res)
+    # A plain CartesianProduct (both sides unbounded, no broadcast) is
+    # never an acceptable plan at 100 TB; deliberate tiny-side cross
+    # joins compile to BroadcastNestedLoopJoin via their hints.
+    assert "CartesianProduct" not in formatted_plan(built[0])
 
 
 @pytest.fixture(scope="module")

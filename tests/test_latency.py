@@ -5,7 +5,7 @@ testable on both execution modes:
 - micro-batch: a real pipeline measures per-record
   landing->processing latency (file spool -> 0s trigger ->
   foreachBatch timestamps).
-- continuous: ``bench.continuous_latency`` runs ContinuousTrigger
+- continuous: ``continuous_latency`` below runs ContinuousTrigger
   end-to-end (rate -> 50 ms epochs -> memory sink) with a timed stop
   and measures first-visible latency by polling the sink table. Two
   sandbox constraints shape it: Python ForeachWriter cannot run in
@@ -16,17 +16,19 @@ testable on both execution modes:
 
 Honest numbers (local[32]): micro-batch floor is O(100ms) per trigger
 regardless of record cost, so p99 lands in the 0.1-2s class — the
-right tool for throughput (bench.py: >100k rows/s). Continuous mode
-measures p50 ~150-250 ms first-visible here because the memory-sink
-poll adds an epoch commit + collect RPC per observation; the <10ms
-class needs kafka->kafka per-record delivery, no broker in this
-sandbox.
+right tool for throughput (perfbench ``etl_replay`` measures its
+rows/s). Continuous mode measures p50 ~150-250 ms first-visible here
+because the memory-sink poll adds an epoch commit + collect RPC per
+observation; the <10ms class needs kafka->kafka per-record delivery,
+no broker in this sandbox.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
+import tempfile
 import time
 import urllib.request
 
@@ -122,68 +124,91 @@ def test_simple_transform_per_record_latency_submillisecond(spark, tmp_path):
     assert per_record_ms < 1.0  # the sub-millisecond claim, measured
 
 
+def continuous_latency(spark, warmup_s: float, measure_s: float) -> dict:
+    """First-visible record latency under ContinuousTrigger.
+
+    Pipeline: rate source -> continuous trigger (50 ms epochs) ->
+    memory sink; the driver polls the sink table and records, per
+    record, first-seen time minus source-generation time. With a
+    memory sink the number includes the epoch commit plus the
+    driver's poll/collect RPC, so this shows the continuous path
+    running end-to-end, not the sub-10 ms kafka->kafka figure."""
+    work = tempfile.mkdtemp(prefix="wire_cont_lat_")
+    name = f"cont_lat_{os.getpid()}"
+    q = None
+    try:
+        q = (
+            spark.readStream.format("rate")
+            .option("rowsPerSecond", "100")
+            .option("numPartitions", "1")
+            .load()
+            .writeStream.format("memory")
+            .queryName(name)
+            .trigger(continuous="50 milliseconds")
+            .option("checkpointLocation", os.path.join(work, "ck"))
+            .start()
+        )
+        time.sleep(warmup_s)  # codegen + epoch pipeline spinup
+        hi = spark.sql(f"SELECT max(value) v FROM {name}").collect()[0].v
+        hi = -1 if hi is None else hi
+        seen: dict[int, float] = {}
+        t_end = time.time() + measure_s
+        while time.time() < t_end:
+            rows = spark.sql(
+                f"SELECT value, timestamp FROM {name} WHERE value > {hi}"
+            ).collect()
+            tnow = time.time()
+            for r in rows:
+                seen[r.value] = tnow - r.timestamp.timestamp()
+                hi = max(hi, r.value)
+            time.sleep(0.005)
+        lats = sorted(seen.values())
+        if not lats:
+            return {"error": "no records observed"}
+        n = len(lats)
+        return {
+            "n": n,
+            "p50_ms": round(lats[n // 2] * 1000.0, 1),
+            "min_ms": round(lats[0] * 1000.0, 1),
+        }
+    finally:
+        if q is not None:
+            q.stop()
+        shutil.rmtree(work, ignore_errors=True)
+
+
 def test_continuous_trigger_runs_and_measures(spark):
     """ContinuousTrigger executes end-to-end in this sandbox (epoch
     pipeline + memory-sink commits + clean stop) and yields a
     non-empty latency profile in the sub-second class — the exercised
     form of the reference's declared <10ms continuous-mode story."""
-    import bench
-
-    prof = bench.continuous_latency(spark, warmup_s=3.0, measure_s=5.0)
+    prof = continuous_latency(spark, warmup_s=3.0, measure_s=5.0)
     assert "error" not in prof, prof
     assert prof["n"] > 100          # ~100 rows/s for 5s measured
     assert prof["p50_ms"] < 2000    # continuous class, not batch class
     assert prof["min_ms"] > 0
 
 
-def test_median_latency_combines_runs_per_metric():
-    """The round-9 latency methodology (VERDICT r8 item 4): headline
-    percentiles are the per-metric MEDIAN across runs, failed runs
-    are kept in `runs` but excluded from the median, and non-numeric
-    fields pass through from the first successful run."""
+def test_bench_profile_reads_status_stores(spark, sf_dir):
+    """``bench.profile`` against ``perfbench/common.py``'s readers: each
+    record carries the job, action, Python and construction layers, and
+    no query leaves storage behind."""
     import bench
+    from wire_spark.queries._util import release_tracked_caches
 
-    profiles = iter([
-        {"n": 30, "p50_ms": 200.0, "p99_ms": 900.0, "trigger": "x"},
-        {"error": "boom"},
-        {"n": 30, "p50_ms": 180.0, "p99_ms": 300.0, "trigger": "x"},
-    ])
-    out = bench._median_latency(lambda: next(profiles), runs=3)
-    assert out["methodology"] == "median of 2/3 runs"
-    assert len(out["runs"]) == 3 and out["runs"][1] == {"error": "boom"}
-    # even count -> upper median (index len//2) per metric
-    assert out["p50_ms"] == 200.0 and out["p99_ms"] == 900.0
-    assert out["trigger"] == "x"
+    spark.catalog.clearCache()
+    release_tracked_caches()  # earlier tests in the session may hold some
+    rec = {}
+    for name in ("q1_pricing_summary", "dedup_embedding_cosine", "dedup_components_star"):
+        rec[name] = bench.profile(spark, name, sf_dir)
+        assert len(spark.sparkContext._jsc.sc().getRDDStorageInfo()) == 0, name
 
-    def always_fail():
-        raise RuntimeError("dead")
-
-    bad = bench._median_latency(always_fail, runs=2)
-    assert bad["error"] == "all latency runs failed"
-    assert all("error" in p for p in bad["runs"])
-
-
-def test_host_correction_factor_deadband_and_floor():
-    """The round-15 contention model (SCALE.md; ADVICE r14 made the
-    deadband edge continuous): raw == corrected inside the 1.3x probe
-    deadband; beyond it the factor is 1.3*ref/measured — exactly 1.0
-    AT the boundary, so ±1% of probe noise moves the headline by ~1%,
-    never the old 24% cliff; a >4.3x probe blowup floors at 0.3; a
-    missing probe (old artifacts) corrects nothing."""
-    import bench
-
-    ref = bench._REF_CALIBRATION["cpu_saturate_ms"]
-    assert bench.host_correction_factor(None) == 1.0
-    assert bench.host_correction_factor(ref) == 1.0
-    assert bench.host_correction_factor(1.29 * ref) == 1.0  # jitter
-    # CONTINUITY at the deadband edge: the two sides agree to ~1%
-    lo = bench.host_correction_factor(1.299 * ref)
-    hi = bench.host_correction_factor(1.301 * ref)
-    assert lo == 1.0 and abs(hi - 1.0) < 0.01
-    # r13-class contention: ~2x probe -> ~0.65x correction (1.3/2)
-    assert abs(bench.host_correction_factor(2.0 * ref) - 0.65) < 1e-9
-    assert bench.host_correction_factor(100.0 * ref) == 0.3  # floor
-    # monotone non-increasing in measured time
-    xs = [ref * m for m in (0.5, 1.0, 1.3, 1.5, 2.0, 4.0, 10.0)]
-    fs = [bench.host_correction_factor(x) for x in xs]
-    assert all(a >= b for a, b in zip(fs, fs[1:]))
+    q1 = rec["q1_pricing_summary"]
+    assert q1["jobs"] >= 1 and q1["action_s"] > 0
+    assert q1["operators"]["HashAggregate"] >= 1
+    # the applyInPandas GEMM node
+    assert rec["dedup_embedding_cosine"]["python_run_s"] > 0
+    # its connected-components rounds run while the DataFrame is built,
+    # on top of the one schema-reading job per table that q1 also runs
+    star = rec["dedup_components_star"]
+    assert star["construct_jobs"] > q1["construct_jobs"] >= 1

@@ -475,25 +475,6 @@ def test_q5_broadcast_is_threshold_driven(spark, sf_dir):
     assert has_broadcast_join(df)
 
 
-def test_no_cartesian_product_anywhere_in_registry(spark, sf_dir):
-    # Global hygiene sweep: a plain CartesianProduct (both sides
-    # unbounded, no broadcast) is never an acceptable plan at 100 TB.
-    # Deliberate tiny-side cross joins compile to
-    # BroadcastNestedLoopJoin via their broadcast hints and are fine;
-    # an unhinted cartesian sneaking into any of the 185 registry
-    # queries should fail CI, not a 100 TB run.
-    from wire_spark.plans import formatted_plan
-
-    offenders = []
-    for name, q in REG.items():
-        try:
-            if "CartesianProduct" in formatted_plan(q.fn(spark, sf_dir)):
-                offenders.append(name)
-        except Exception as e:  # surface build failures too
-            offenders.append(f"{name} (plan build failed: {e})")
-    assert not offenders, offenders
-
-
 def test_histogram_prefix_sums_never_window_globally(spark, sf_dir):
     """VERDICT r8 item 5: the histogram-navigated argmin family
     (quality_gini_stump / quality_tree_depth2 / model_auc_rank) used

@@ -7,12 +7,14 @@ Usage:
         run write statements against a session-local store
     python -m wire_spark query "GET k" [--associative]
         run read statements, print QueryRows JSON
-    python -m wire_spark bench
-        run the headline benchmark (same as bench.py)
+    python -m wire_spark bench [NAME ...]
+        profile catalog queries (same as bench.py; all bench queries
+        when no NAME is given)
     python -m wire_spark list [--filter SUBSTR]
         list the catalog's registered queries with their one-liners
     python -m wire_spark run NAME [--sf-dir DIR] [--limit N] [--explain]
-        run one catalog query, print rows as JSON lines
+        run one catalog query, print rows as JSON lines (or, with
+        --explain, its formatted physical plan)
     python -m wire_spark maintain compact PATH [--target-mb N] [--sort-by c1,c2]
     python -m wire_spark maintain expire PATH COL KEEP_FROM
         table maintenance (operators/maintenance.py)
@@ -39,7 +41,9 @@ def main(argv: list[str] | None = None) -> int:
     p_query.add_argument("statements", nargs="+")
     p_query.add_argument("--associative", action="store_true")
 
-    sub.add_parser("bench", help="run the headline benchmark")
+    p_bench = sub.add_parser("bench", help="profile catalog queries")
+    p_bench.add_argument("names", nargs="*",
+                         help="queries to profile (default: every bench query)")
 
     p_list = sub.add_parser("list", help="list catalog queries")
     p_list.add_argument("--filter", default="", help="substring filter")
@@ -69,7 +73,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "bench":
         import bench  # repo-root harness
 
-        bench.main()
+        bench.main(args.names)
         return 0
 
     if args.cmd == "list":
@@ -109,9 +113,9 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "run":
         df = reg[args.name].fn(spark, args.sf_dir)
         if args.explain:
-            print(df._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution
-                .ExplainMode.fromString("formatted")))
+            from wire_spark.plans import formatted_plan
+
+            print(formatted_plan(df))
             return 0
         rows = df.limit(args.limit).collect() if args.limit else df.collect()
         from wire_spark.queries._util import release_tracked_caches

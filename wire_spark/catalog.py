@@ -89,10 +89,10 @@ def register(name: str, oracle: str | None = None, doc: str = "", bench: bool = 
     per-round materialization (the connected-components/PageRank/
     Lloyd families), and eager caches ahead of multi-branch fan-out.
     Harness code must therefore time construction + action together
-    (bench.py does) and must not call ``fn`` speculatively where a
+    (bench.py times both) and must not call ``fn`` speculatively where a
     job is unacceptable; plan-only tooling acknowledges this
-    (tools/plan_audit.py dumps the FINAL DataFrame's plan, after any
-    construction-time loops have run).
+    (``python -m wire_spark run NAME --explain`` prints the FINAL
+    DataFrame's plan, after any construction-time loops have run).
     """
 
     def deco(fn: QueryFn) -> QueryFn:

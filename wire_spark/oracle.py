@@ -10,6 +10,9 @@ pytest before a round ends.
 from __future__ import annotations
 
 import math
+import os
+import tempfile
+import uuid
 from dataclasses import dataclass, field
 
 import duckdb
@@ -35,7 +38,11 @@ class CompareResult:
 
 
 def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
+    # DuckDB spills to ``.tmp`` under the working directory by default;
+    # give each connection its own absolute directory, which DuckDB
+    # creates on the first spill and removes when the connection closes.
+    spill = os.path.join(tempfile.gettempdir(), f"wire_spark_duckdb_{uuid.uuid4().hex}")
+    con = duckdb.connect(config={"temp_directory": spill})
     for t in TABLES:
         con.execute(
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')"

@@ -9,7 +9,14 @@ of silently costing a full shuffle at 100 TB.
 
 from __future__ import annotations
 
+import re
+from collections import Counter
+
 from pyspark.sql import DataFrame
+
+#: A numbered operator line of the formatted plan, e.g.
+#: ``(7) HashAggregate [codegen id : 2]`` or ``(1) Scan parquet ``.
+_OPERATOR_LINE = re.compile(r"^\(\d+\) ([^\[]+)")
 
 
 def formatted_plan(df: DataFrame) -> str:
@@ -40,13 +47,19 @@ def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in formatted_plan(df) or "BroadcastNestedLoopJoin" in formatted_plan(df)
 
 
-def count_shuffles(df: DataFrame) -> int:
-    plan = formatted_plan(df)
-    return sum(
-        1
+def operator_counts(plan: str) -> Counter:
+    """Operator name -> number of its numbered lines in ``plan``, a
+    formatted plan."""
+    return Counter(
+        m.group(1).strip()
         for line in plan.splitlines()
-        if line.strip().startswith("(") and ") Exchange" in line
+        if (m := _OPERATOR_LINE.match(line.strip()))
     )
+
+
+def count_shuffles(df: DataFrame) -> int:
+    ops = operator_counts(formatted_plan(df))
+    return sum(n for op, n in ops.items() if op.startswith("Exchange"))
 
 
 def has_take_ordered(df: DataFrame) -> bool:
