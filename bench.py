@@ -3,10 +3,9 @@
     python bench.py [NAME ...]
 
 profiles each named query (every ``bench=True`` query when no name is
-given) over the tables in ``wire_spark.engine.DEFAULT_SF_DIR``
-($SPARK_GRAFT_SF_DIR, default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS].  The records go to BENCH_DETAIL.json, and
-one JSON summary line is printed.
+given) over the tables in ``wire_spark.engine.DEFAULT_SF_DIR`` (set
+by $SPARK_GRAFT_SF_DIR) on local[$SPARK_GRAFT_CPUS].  The records go
+to BENCH_DETAIL.json, and one JSON summary line is printed.
 
 Wall time alone says little on a shared host, so each record carries
 the layers the host does not distort, read from Spark's status stores
