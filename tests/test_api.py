@@ -181,7 +181,7 @@ def test_queued_execute_over_http_with_wait(svc):
 
 
 def test_queued_writes_concurrent_with_streaming_pipeline(svc, tmp_path):
-    """VERDICT r7 task 6: the KV queue (service.go:1106-1159) and a
+    """The KV queue (service.go:1106-1159) and a
     streaming pipeline (pipeline.go) exercising the SAME KV store at
     the same time.  A file-source stream foreachBatch-es rows into the
     store while HTTP queued writes hit overlapping keys concurrently;
@@ -304,7 +304,7 @@ def test_empty_statement_list_is_rejected_with_400(svc):
     (request_parser.go:14 ErrNoStatements), never a vacuous success.
     The queued path previously returned sequence_number 0 without
     enqueueing anything, and wait=true 'succeeded' immediately
-    against seq 0 — the ADVICE r8 degenerate-success finding."""
+    against seq 0."""
     import urllib.error
 
     s, base = svc

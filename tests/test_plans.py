@@ -476,7 +476,7 @@ def test_q5_broadcast_is_threshold_driven(spark, sf_dir):
 
 
 def test_histogram_prefix_sums_never_window_globally(spark, sf_dir):
-    """VERDICT r8 item 5: the histogram-navigated argmin family
+    """The histogram-navigated argmin family
     (quality_gini_stump / quality_tree_depth2 / model_auc_rank) used
     a global Window.orderBy prefix sum — safe for a bounded token-
     count domain, but a continuous feature would collapse the whole

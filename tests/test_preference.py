@@ -123,7 +123,7 @@ def test_bt_edge_quotient_survives_big_n(spark):
     1553255926290448384 with ANSI on), so the query keeps the floor
     division in DECIMAL as (a - a % b) / b; this pins the fixed
     expression against the arbitrary-precision Python value and the
-    wrap value specifically (ADVICE r10, preference.py)."""
+    wrap value specifically (preference.py)."""
     n, s = 20_000_000, 0
     df = spark.createDataFrame([(n, s, s)], "n long, s1_i long, s1_j long")
     df.createOrReplaceTempView("bt_edge_big_n")

@@ -531,7 +531,7 @@ def test_pii_scan_redact_audit(spark):
 def test_tracked_caches_release_after_action(spark, sf_dir, tmp_path):
     """Catalog queries keep intermediates through ``tracked_cache`` or
     ``materialize`` so long-lived callers can free them once their
-    actions finish (ADVICE r8: tcloseness_audit pinned its class x
+    actions finish (tcloseness_audit pinned its class x
     bucket grid forever; the checkpointed graph and median queries
     held their RDDs until the session ended).  Pin the lifecycle:
     after the action, ``release_tracked_caches`` empties the cache

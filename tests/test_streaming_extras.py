@@ -233,96 +233,87 @@ def test_cdc_stream_to_keyed_table(spark, tmp_path):
     assert state == {"d1": '{"a":1}', "d3": '{"c":1}'}  # d2 deleted, d3 inserted
 
 
-def test_streaming_minhash_near_dup_detection(spark, tmp_path):
-    """Incremental LSH dedup: a doc arriving in a later micro-batch
-    collides in every band with an identical earlier doc, and in no
-    band with unrelated docs; state persists across batches."""
-    import json as _json
-    import os as _os
+def _stream_dedup(spark, src, idx, ck):
+    """Runs ``append_and_probe`` in ``foreachBatch`` over a
+    (doc_id, text) JSON-lines file stream, one file per micro-batch;
+    returns each batch's sorted pairs."""
+    from wire_spark.operators.text_index import append_and_probe
 
-    from wire_spark.streaming.dedup_stream import streaming_near_dup_flags
-
-    in_dir = str(tmp_path / "in")
-    _os.makedirs(in_dir)
-    text_a = "the quick brown fox jumps over the lazy dog again and again"
-    text_b = "completely different content with no overlapping shingles at all here"
-    with open(_os.path.join(in_dir, "b0.json"), "w") as f:
-        f.write(_json.dumps({"doc_id": 1, "text": text_a}) + "\n")
-        f.write(_json.dumps({"doc_id": 2, "text": text_b}) + "\n")
-
-    stream = (
+    batches: list[list[tuple]] = []
+    q = (
         spark.readStream.schema("doc_id LONG, text STRING")
         .option("maxFilesPerTrigger", "1")
-        .json(in_dir)
-    )
-    rows: list[tuple] = []
-
-    def run_once():
-        q = (
-            streaming_near_dup_flags(stream)
-            .writeStream.foreachBatch(
-                lambda bdf, _e: rows.extend(
-                    (r.doc_id, r.band, r.n_prior, tuple(r.prior_ids)) for r in bdf.collect()
-                )
+        .json(src)
+        .writeStream.foreachBatch(
+            lambda bdf, _e: batches.append(
+                sorted(map(tuple, append_and_probe(bdf, idx).collect()))
             )
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .start()
         )
-        q.awaitTermination(120)
-
-    run_once()
-    # first batch: every band of both docs lands in a fresh bucket
-    assert {r[0] for r in rows} == {1, 2}
-    assert all(r[2] == 0 for r in rows)
-    assert len(rows) == 12  # 2 docs x 6 bands
-
-    # batch 2: doc 3 duplicates doc 1 -> collides with it in all 6
-    # bands (identical signature); never with doc 2
-    with open(_os.path.join(in_dir, "b1.json"), "w") as f:
-        f.write(_json.dumps({"doc_id": 3, "text": text_a}) + "\n")
-    rows.clear()
-    run_once()
-    mine = [r for r in rows if r[0] == 3]
-    assert len(mine) == 6
-    assert all(r[2] == 1 and r[3] == (1,) for r in mine)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", ck)
+        .start()
+    )
+    q.awaitTermination(300)
+    return batches
 
 
-def test_streaming_bands_agree_with_batch_lsh(spark, sf_dir):
-    """The stream-safe signature must reproduce the batch banding
-    EXACTLY — same (doc_id, band, bsig) rows, not merely compatible
-    buckets. (The original weaker shares-a-bucket assertion let a
-    nested-lambda mis-binding ship signatures whose four band slots
-    all held the p=0 minhash — near-identical docs still collided, so
-    the bug was invisible until the incremental gate diverged from
-    the batch probe.)"""
-    from wire_spark.catalog import load_registry
+def _write_docs(spark, sf_dir, src, keep, n_files):
+    """Spools the documents selected by ``keep`` as ``n_files``
+    JSON-lines files (doc_id % n_files)."""
     from wire_spark.engine import load_table
-    from wire_spark.queries.dedup import _minhash_bands
-    from wire_spark.streaming.dedup_stream import minhash_bands
 
-    docs = load_table(spark, sf_dir, "documents")
-    streamed = {
-        (r.doc_id, r.band, r.bsig)
-        for r in minhash_bands(docs).collect()
-    }
-    _, band = _minhash_bands(spark, sf_dir)
-    batch = {(r.doc_id, r.band, r.bsig) for r in band.collect()}
-    assert streamed == batch
-    assert streamed  # non-vacuous
+    docs = load_table(spark, sf_dir, "documents").filter(keep)
+    rows = [(r.doc_id, r.text) for r in docs.select("doc_id", "text").collect()]
+    for i in range(n_files):
+        _write_jsonl(
+            os.path.join(src, f"b{i}.json"),
+            [{"doc_id": d, "text": t} for d, t in rows if d % n_files == i],
+        )
 
-    # and therefore every batch near-dup pair shares a streaming bucket
-    buckets: dict[tuple, set] = {}
-    for d, b, s in streamed:
-        buckets.setdefault((b, s), set()).add(d)
-    batch_pairs = [
-        (r.d1, r.d2)
-        for r in load_registry()["dedup_minhash_lsh"].fn(spark, sf_dir).collect()
-    ]
-    assert batch_pairs  # non-vacuous
-    for d1, d2 in batch_pairs:
-        assert any(d1 in mem and d2 in mem for mem in buckets.values()), (d1, d2)
+
+def test_streaming_minhash_near_dup_detection(spark, tmp_path):
+    """Incremental dedup on a file stream: batch 1 (two unrelated
+    docs) emits no pair; batch 2 (a copy of doc 1) emits exactly
+    (1, 3, 1.0) — the index carries batch 1 across the restart."""
+    src, idx, ck = (str(tmp_path / n) for n in ("in", "idx", "ck"))
+    text_a = "the quick brown fox jumps over the lazy dog again and again"
+    text_b = "completely different content with no overlapping shingles at all here"
+    _write_jsonl(os.path.join(src, "b0.json"),
+                 [{"doc_id": 1, "text": text_a}, {"doc_id": 2, "text": text_b}])
+    assert _stream_dedup(spark, src, idx, ck) == [[]]
+
+    _write_jsonl(os.path.join(src, "b1.json"), [{"doc_id": 3, "text": text_a}])
+    assert _stream_dedup(spark, src, idx, ck) == [[(1, 3, 1.0)]]
+
+
+def test_streaming_pairs_agree_with_batch_lsh(spark, sf_dir, tmp_path):
+    """The sf0.001 corpus streamed as three micro-batches yields, over
+    all batches, exactly ``dedup_minhash_lsh``'s verified pairs — the
+    DuckDB-oracle-gated batch query is the stream path's oracle."""
+    from wire_spark.catalog import load_registry
+
+    src = str(tmp_path / "in")
+    _write_docs(spark, sf_dir, src, F.lit(True), 3)
+    batches = _stream_dedup(spark, src, str(tmp_path / "idx"), str(tmp_path / "ck"))
+    assert len(batches) == 3
+    streamed = sorted(
+        (min(d1, d2), max(d1, d2), j) for b in batches for d1, d2, j in b
+    )
+    batch = sorted(
+        map(tuple, load_registry()["dedup_minhash_lsh"].fn(spark, sf_dir).collect())
+    )
+    assert streamed == batch and batch  # non-vacuous
+
+
+def test_streaming_dedup_long_document(spark, tmp_path):
+    """A 16k-word document and its copy, in one micro-batch, give one
+    pair at 1.0: signing is linear in document length."""
+    text = " ".join(f"w{i}" for i in range(16_384))
+    src = str(tmp_path / "in")
+    _write_jsonl(os.path.join(src, "b0.json"),
+                 [{"doc_id": 7, "text": text}, {"doc_id": 8, "text": text}])
+    batches = _stream_dedup(spark, src, str(tmp_path / "idx"), str(tmp_path / "ck"))
+    assert batches == [[(7, 8, 1.0)]]
 
 
 def test_streaming_anomaly_scores_moment_parity(spark, tmp_path):
@@ -548,56 +539,29 @@ def test_streaming_gopher_gate_matches_batch(spark, tmp_path, sf_dir):
 
 
 def test_streaming_incremental_dedup_gate_matches_batch(spark, tmp_path, sf_dir):
-    """Ingestion-time dedup gate: new documents stream in, their
-    stream-safe band signatures join the STATIC corpus band index
-    (stream-static join, stateless), and every flagged doc must be
-    exactly a batch incremental-probe candidate
-    (dedup_incremental_lsh's pre-verification candidate set) — the
+    """Ingestion-time dedup gate: the corpus index is built at rest
+    from the doc_id % 10 != 0 documents, the rest stream in, and the
+    new documents paired with a corpus document (with their match
+    counts) must be exactly ``dedup_incremental_lsh``'s rows — the
     same index serves backfill and live ingestion."""
+    from collections import Counter
+
+    from wire_spark.catalog import load_registry
     from wire_spark.engine import load_table
-    from wire_spark.queries.dedup import _minhash_bands
-    from wire_spark.streaming.dedup_stream import minhash_bands
+    from wire_spark.operators.text_index import build_minhash_index
 
-    docs = load_table(spark, sf_dir, "documents")
-    _, band = _minhash_bands(spark, sf_dir)
-    corpus_idx = (
-        band.filter(F.col("doc_id") % 10 != 0)
-        .select(F.col("doc_id").alias("corpus_doc"), "band", "bsig")
-        .cache()
-    )
-
-    # batch candidate truth: new-batch bands joined to the corpus index
-    batch_cand = {
-        r.doc_id
-        for r in band.filter(F.col("doc_id") % 10 == 0)
-        .join(corpus_idx, ["band", "bsig"])
-        .select("doc_id").distinct().collect()
+    idx = str(tmp_path / "idx")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    build_minhash_index(docs.filter(F.col("doc_id") % 10 != 0), idx)
+    src = str(tmp_path / "in")
+    _write_docs(spark, sf_dir, src, F.col("doc_id") % 10 == 0, 2)
+    batches = _stream_dedup(spark, src, idx, str(tmp_path / "ck"))
+    streamed = Counter(d2 for b in batches for d1, d2, _ in b if d1 % 10 != 0)
+    batch = {
+        r.new_doc_id: r.n_matches
+        for r in load_registry()["dedup_incremental_lsh"].fn(spark, sf_dir).collect()
     }
-    assert batch_cand  # non-vacuous at sf0.001
-
-    spool = str(tmp_path / "new_docs")
-    docs.filter(F.col("doc_id") % 10 == 0) \
-        .select(F.to_json(F.struct("doc_id", "text")).alias("value")) \
-        .coalesce(2).write.mode("overwrite").text(spool)
-    stream = (
-        spark.readStream.schema("value STRING").text(spool)
-        .select(
-            F.get_json_object("value", "$.doc_id").cast("long").alias("doc_id"),
-            F.get_json_object("value", "$.text").alias("text"),
-        )
-    )
-    flagged = minhash_bands(stream).join(corpus_idx, ["band", "bsig"])
-    q = (
-        flagged.writeStream.format("memory").queryName("incr_gate")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ck_incr"))
-        .start()
-    )
-    q.awaitTermination(120)
-    streamed = {
-        r.doc_id for r in spark.sql("SELECT doc_id FROM incr_gate").collect()
-    }
-    assert streamed == batch_cand
+    assert dict(streamed) == batch and batch  # non-vacuous
 
 
 def test_streaming_windowed_transition_matrix_batch_parity(spark, tmp_path):
@@ -1279,7 +1243,7 @@ def test_streaming_centroid_shift_batch_parity(spark, tmp_path):
 
 
 def test_streaming_stratification_batch_parity(spark, tmp_path):
-    """The streaming stratification monitor (VERDICT r8 stretch 7):
+    """The streaming stratification monitor:
     every CLOSED window's (split, class) rows — within-split share,
     global share, deviation — must equal the batch
     split_stratification_audit computation on that window's slice,

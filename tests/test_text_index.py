@@ -1,6 +1,7 @@
 """At-rest MinHash text index: build/probe parity with the inline
-catalog dedup queries, incremental-append equivalence, and
-partition-pruned probe scans."""
+catalog dedup queries, incremental-append equivalence,
+partition-pruned probe scans, and the append-then-probe step of
+streaming dedup (replay and short documents)."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ from pyspark.sql import functions as F
 
 from wire_spark.engine import load_table
 from wire_spark.operators.text_index import (
+    append_and_probe,
     build_minhash_index,
     probe_minhash_index,
 )
@@ -90,3 +92,38 @@ def test_probe_scans_are_partition_pruned(spark, sf_dir, tmp_path):
 
     assert re.search(r"PartitionFilters: \[pb#\d+ INSET", plan), plan[:2000]
     assert re.search(r"PartitionFilters: \[db#\d+ INSET", plan), plan[:2000]
+
+
+def test_append_and_probe_replay_appends_nothing(spark, sf_dir, tmp_path):
+    """foreachBatch redelivers the last uncommitted batch on restart:
+    applying a batch twice must leave every stored relation's row
+    count unchanged and return the same verified pairs."""
+    d = _docs(spark, sf_dir)
+    idx = str(tmp_path / "tixr")
+
+    def counts():
+        return {
+            rel: spark.read.parquet(os.path.join(idx, rel)).count()
+            for rel in ("sizes", "bands", "shingles")
+        }
+
+    first = sorted(map(tuple, append_and_probe(d, idx).collect()))
+    after_first = counts()
+    again = sorted(map(tuple, append_and_probe(d, idx).collect()))
+    assert counts() == after_first
+    assert after_first["sizes"] == d.filter(F.size(F.split("text", " ")) >= 3).count()
+    assert again == first and first  # non-vacuous
+    assert all(d1 < d2 for d1, d2, _ in first)  # one row per in-batch pair
+
+
+def test_append_and_probe_short_documents_never_pair(spark, tmp_path):
+    """Documents under 3 words have no shingles, hence no signature:
+    they must never pair — not with each other, not with their own
+    copies — even when they are all a batch holds."""
+    texts = ["", "hello world", "completely unrelated"]
+    batch = spark.createDataFrame(
+        list(enumerate(texts + texts, start=1)), "doc_id LONG, text STRING"
+    )
+    idx = str(tmp_path / "tixs")
+    assert append_and_probe(batch, idx).collect() == []
+    assert append_and_probe(batch, idx).collect() == []

@@ -124,7 +124,7 @@ def test_merge_upsert_bucket_count_mismatch_raises(spark, tmp_path):
     """A merge whose n_buckets differs from the count the table was
     written with must REFUSE: keys would hash into different buckets,
     the anti-join would miss the old rows, and the table would
-    silently accumulate duplicate keys (ADVICE r14). The count is
+    silently accumulate duplicate keys. The count is
     persisted as an underscore-prefixed sibling marker the parquet
     reader never sees."""
     import pytest

@@ -431,7 +431,7 @@ def test_null_payload_upsert_is_tombstone_not_cell0(spark):
     """A CDC update whose full_document payload is NULL (a Mongo
     update event without fullDocument lookup) must NOT be assigned —
     before the r15 gate its K NULL similarities plus NULLS-LAST
-    ordering silently parked it in cell 0 (ADVICE r14).  update_cells
+    ordering silently parked it in cell 0.  update_cells
     treats it as a tombstone: the key leaves the index and re-enters
     on the next payload-bearing change."""
     from wire_spark.operators.vector_index import (

@@ -1,6 +1,6 @@
 """Regenerate the full-registry query inventory in COVERAGE.md.
 
-VERDICT r9 stretch #8: the hand-written COVERAGE.md maps SURVEY §2
+The hand-written COVERAGE.md maps SURVEY §2
 operator rows to implementations, but predates the round-9 waves and
 never enumerated the registry itself.  This tool appends (or
 replaces) a GENERATED section between marker comments: every catalog

@@ -19,10 +19,12 @@ Usage:
     python tools/degenerate_sweep.py duprows    # exact duplicate rows (broken key uniqueness)
 
 The corpus is derived from sf0.001 (schemas stay identical) and
-materialized under .tmp/. Divergence classes this has caught (round
-9): Spark-ANSI DIVIDE_BY_ZERO where DuckDB NULL-bands (even DOUBLE
-0/0 errors under ANSI), the no-groupBy all-NULL sentinel row vs the
-oracle's zero GROUP BY rows, and oracle-side log2(0). Known
+materialized under .tmp/sweep_<mode> in the repository root (the
+parent of this script's directory), whatever the working directory.
+Divergence classes this has caught (round 9): Spark-ANSI
+DIVIDE_BY_ZERO where DuckDB NULL-bands (even DOUBLE 0/0 errors under
+ANSI), the no-groupBy all-NULL sentinel row vs the oracle's zero
+GROUP BY rows, and oracle-side log2(0). Known
 remaining by-design divergences (empty corpus only): grand-total
 grouping-set rows (DuckDB emits the standard's one row over an
 empty relation, Spark emits none — rollup/cube/grouping-sets) and
@@ -35,7 +37,8 @@ import os
 import sys
 import threading
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
@@ -55,7 +58,9 @@ KNOWN_TIMEWARP: set[str] = set()
 # 4 GB temp cap (verified standalone, not a bisect artifact) while
 # every Spark side runs in seconds (banded pairs + per-round lineage
 # truncation) — the intended scale asymmetry, same class as the
-# three sf0.1-impractical oracles in NOTES.md.
+# three oracles that are impractical at sf0.1
+# (dedup_survivors_central, graph_pagerank_personalized,
+# sample_dedup_weighted).
 KNOWN_BADJSON: set[str] = set()
 KNOWN_BIGCLIQUE: set[str] = set()
 KNOWN_ZEROVEC: set[str] = set()
@@ -314,7 +319,7 @@ def build_corpus(spark, mode: str, dst: str) -> None:
                     "transform(sequence(1, 64),"
                     " i -> CAST(3.0 AS FLOAT))"))
                 .when(F.col("vec_id") % 37 == 0, F.expr(
-                    # the ADVICE-r12 asymmetric band: dd = 64*2048^2
+                    # the asymmetric band: dd = 64*2048^2
                     # ~ 2.7e8 passes the dd-gate, but |component| >
                     # 1024 exceeds the spectral kernels' fixed-point
                     # budget — before r13 Spark RAISED while the
@@ -391,7 +396,7 @@ def build_corpus(spark, mode: str, dst: str) -> None:
                 # when/otherwise would coerce the whole column to the
                 # BIGINT of vec_id and the written corpus schema would
                 # differ from sf0.001, breaking the module contract
-                # that schemas stay identical (ADVICE r13; the other
+                # that schemas stay identical (the other
                 # manykeys branches are type-stable — int64+int64 and
                 # string concat).  vec_id+1000 fits int32 at every
                 # sweep SF by orders of magnitude.
@@ -458,7 +463,7 @@ def main() -> int:
              "duprows": KNOWN_DUPROWS}[mode]
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
-    dst = f"/root/repo/.tmp/sweep_{mode}"
+    dst = os.path.join(REPO, ".tmp", f"sweep_{mode}")
     build_corpus(spark, mode, dst)
     if mode == "manykeys":
         # pinned distinct-count budget: the axis only bites if the

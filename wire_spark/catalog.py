@@ -80,7 +80,7 @@ def register(name: str, oracle: str | None = None, doc: str = "", bench: bool = 
     happened in round 8 — a second ``events_changepoint_cusum`` in a
     different module shadowed one of the pair with no error).
 
-    Construction-time-job convention (ADVICE r15): ``fn(spark,
+    Construction-time-job convention: ``fn(spark,
     sf_dir)`` is NOT guaranteed to be a free, plan-only call.  A
     registered query may legitimately run Spark jobs while BUILDING
     its DataFrame — driver-side collects that re-enter the plan as

@@ -5,7 +5,6 @@ text ops): import these to apply the same expressions the catalog
 queries are verified with to any DataFrame.
 """
 
-from wire_spark.functions.hashing import md5_long, minhash_hashes, word_shingles  # noqa: F401
 from wire_spark.functions.text import (  # noqa: F401
     bpe_tokens,
     fingerprint,
@@ -14,3 +13,4 @@ from wire_spark.functions.text import (  # noqa: F401
     stopword_tokens,
     ws_tokens,
 )
+from wire_spark.queries._util import md5_long, word_shingles  # noqa: F401

@@ -325,7 +325,7 @@ def pagerank_fixed(
     adds no extra shuffle. Returns ``(node, d, r)`` — out-degree
     (strength when weighted) and final fixed-point rank.
 
-    Return-value contract (ADVICE r15): the session's checkpoint dir
+    Return-value contract: the session's checkpoint dir
     decides between reliable and local checkpoints.  With a dir
     configured every checkpoint is reliable and eager.  Without one,
     the returned DataFrame's lineage ends in the last iteration's

@@ -34,6 +34,10 @@ Append = the same builder in append mode: signatures are per-doc
 (never global state), so incrementally indexed corpora are
 bit-identical to a from-scratch build — asserted in
 tests/test_text_index.py.
+
+Streaming ingest dedup = ``append_and_probe`` inside ``foreachBatch``:
+each micro-batch is a static frame, so it is appended and probed with
+the same kernel — no second MinHash form and no streaming state.
 """
 
 from __future__ import annotations
@@ -43,7 +47,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wire_spark.queries._util import t4, word_shingles
+from wire_spark.queries._util import md5_long, t4, word_shingles
 
 _N_BUCKETS = 64  # hive partitions per relation; scale with corpus
 
@@ -69,21 +73,12 @@ def _pb(band, bsig):
     # deterministic bucket of a band signature: the same md5-derived
     # integer arithmetic as every other hash in the repo, so probe
     # and build can never disagree on a bucket
-    return (
-        F.conv(
-            F.substring(F.md5(F.concat_ws(":", band.cast("string"), bsig)), 1, 15),
-            16, 10,
-        ).cast("long") % _N_BUCKETS
-    )
+    return md5_long(F.concat_ws(":", band.cast("string"), bsig)) % _N_BUCKETS
 
 
-def build_minhash_index(docs: DataFrame, path: str, mode: str = "overwrite") -> dict:
-    """Materialize (or, with ``mode='append'``, extend) the index for
-    a (doc_id, text) frame.  Signatures are per-document — no global
-    state — so appended batches compose bit-identically with a
-    from-scratch build over the union.  Returns the stored index's
-    total band/doc row counts after this write (metadata-only scans
-    of the just-written parquet)."""
+def _write_index(docs: DataFrame, path: str, mode: str) -> None:
+    # sizes/ is written LAST: a doc_id there means its bands and
+    # shingles are stored, which append_and_probe's replay check reads
     bands = _band_signatures(docs).withColumn("pb", _pb(F.col("band"), F.col("bsig")))
     sh = _doc_shingles(docs).withColumn("db", F.col("doc_id") % _N_BUCKETS)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
@@ -96,6 +91,16 @@ def build_minhash_index(docs: DataFrame, path: str, mode: str = "overwrite") -> 
         .write.mode(mode).partitionBy("db").parquet(os.path.join(path, "shingles"))
     )
     sizes.write.mode(mode).parquet(os.path.join(path, "sizes"))
+
+
+def build_minhash_index(docs: DataFrame, path: str, mode: str = "overwrite") -> dict:
+    """Materialize (or, with ``mode='append'``, extend) the index for
+    a (doc_id, text) frame.  Signatures are per-document — no global
+    state — so appended batches compose bit-identically with a
+    from-scratch build over the union.  Returns the stored index's
+    total band/doc row counts after this write (metadata-only scans
+    of the just-written parquet)."""
+    _write_index(docs, path, mode)
     # stats from the JUST-WRITTEN parquet (footer-metadata counts) —
     # counting the lazy frames would re-run the whole signing
     # pipeline twice more (r9 review finding)
@@ -131,6 +136,12 @@ def probe_minhash_index(
     # keeps the whole probe (including both partition-pruned stored
     # scans) in ONE inspectable plan (tests assert PartitionFilters)
     touched_pb = sorted({r.pb for r in nb.select("pb").distinct().collect()})
+    no_pairs = nb.select(
+        F.col("doc_id").alias("d1"), F.col("doc_id").alias("d2"),
+        F.lit(0.0).alias("jaccard"),
+    ).limit(0)
+    if not touched_pb:  # every batch doc is under 3 words: no bands
+        return no_pairs
     bands = spark.read.parquet(os.path.join(path, "bands")).filter(
         F.col("pb").isin(touched_pb)
     )
@@ -150,9 +161,7 @@ def probe_minhash_index(
     )
     touched_db = sorted({r.db for r in cand.select("db").distinct().collect()})
     if not touched_db:
-        return cand.select(
-            "d1", "d2", F.lit(0.0).alias("jaccard")
-        ).limit(0)
+        return no_pairs
     ish = spark.read.parquet(os.path.join(path, "shingles")).filter(
         F.col("db").isin(touched_db)
     )
@@ -171,4 +180,47 @@ def probe_minhash_index(
         .join(F.broadcast(qsz.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"))), "d2")
         .filter(jac >= threshold)
         .select("d1", "d2", t4(jac).alias("jaccard"))
+    )
+
+
+def append_and_probe(batch: DataFrame, path: str) -> DataFrame:
+    """Incremental near-dup detection for one static (doc_id, text)
+    micro-batch — the body of a ``foreachBatch`` ingest dedup.
+
+    1. Appends to the index at ``path`` (created on the first call)
+       the batch documents it does not already hold: a left-anti join
+       on the stored ``sizes/``, so a replayed micro-batch appends
+       nothing.
+    2. Probes the batch against the index — which now holds every
+       earlier batch and this one — with ``probe_minhash_index`` at
+       its 0.8 threshold.
+    3. Returns exact-verified (d1, d2, jaccard) pairs.  d2 is always a
+       batch document; d1 is an earlier indexed document or, for a
+       pair inside the batch, the smaller id — each such pair appears
+       once.  Self-pairs are dropped.
+
+    The contract is verified pairs, not candidate buckets: precision
+    is 1.0 and the consumer runs no exact check of its own.  Calling
+    it again on an applied batch leaves the three relations unchanged
+    and returns the same pairs (plus any with documents indexed
+    since).  Documents under 3 words have no shingles, so they never
+    pair.  ``sizes/`` is written last; a crash between the three
+    relation writes leaves bands/shingles rows that the replay appends
+    again — the same window ``build_minhash_index(mode="append")``
+    has.
+    """
+    spark = batch.sparkSession
+    sizes = os.path.join(path, "sizes")
+    new = batch
+    p = spark._jvm.org.apache.hadoop.fs.Path(sizes)
+    if p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p):
+        stored = spark.read.parquet(sizes).select("doc_id")
+        new = batch.join(stored, "doc_id", "left_anti")
+    _write_index(new, path, mode="append")
+    in_batch = batch.select(F.col("doc_id").alias("d1"), F.lit(True).alias("both"))
+    return (
+        probe_minhash_index(spark, path, batch)
+        .join(in_batch, "d1", "left")
+        .filter(F.col("both").isNull() | (F.col("d1") < F.col("d2")))
+        .select("d1", "d2", "jaccard")
     )

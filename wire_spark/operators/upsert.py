@@ -65,7 +65,7 @@ def _check_bucket_count(spark: SparkSession, path: str, n_buckets: int) -> None:
     """Refuse to merge with a bucket count the table was not written
     with: keys would hash into different buckets, the anti-join would
     miss the old rows, and the table would silently accumulate
-    duplicate keys (ADVICE r14). Tables that predate the marker get a
+    duplicate keys. Tables that predate the marker get a
     weaker partition-dir check (any ``__bucket=B`` dir with
     B >= n_buckets proves a mismatch) and are stamped going forward."""
     stored = stored_bucket_count(spark, path)

@@ -272,7 +272,7 @@ def update_cells(cells: DataFrame, delta: DataFrame,
     - an upsert whose payload is NULL (a Mongo update event delivered
       WITHOUT fullDocument lookup) cannot be assigned — its K cosine
       similarities would all be NULL and the NULLS-LAST/tie-break
-      ordering would silently park it in cell 0 (ADVICE r14). Such a
+      ordering would silently park it in cell 0. Such a
       key is treated as a TOMBSTONE for the index: it leaves via the
       touched anti join and re-enters on the next payload-bearing
       change, the same don't-guess rule as the ``_valid_vectors``
@@ -322,7 +322,7 @@ def merge_cells_update(spark: SparkSession, path: str, delta: DataFrame,
 
     ``n_buckets`` defaults to the count the stored table was written
     with (the ``_n_buckets=`` marker); passing a different count
-    raises instead of silently duplicating keys (ADVICE r14).  A
+    raises instead of silently duplicating keys.  A
     NULL-payload upsert is routed to the delete side — it cannot be
     assigned, and leaving the stale row would diverge from
     ``update_cells`` (see its docstring).
@@ -376,7 +376,7 @@ def merge_index_update(spark: SparkSession, path: str,
     codes_path = os.path.join(path, "codes")
     # the stored table's own bucket count, never an assumed constant —
     # a mismatched count hashes keys into different buckets and the
-    # reverse-index read silently misses the old rows (ADVICE r14)
+    # reverse-index read silently misses the old rows
     n_buckets = stored_bucket_count(spark, cells_path) or _CELLS_BUCKETS
     cent = spark.read.parquet(os.path.join(path, "centroids")).withColumn(
         "cn", F.sqrt(_dot(F.col("cv"), F.col("cv"))))

@@ -145,7 +145,7 @@ def events_moment(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: :func:`release_tracked_caches` once their actions complete.
 #: Without this, a session that runs many queries (or the same query
 #: across different sf_dirs — distinct plans, distinct cache entries)
-#: pins executor storage memory indefinitely (ADVICE r8,
+#: pins executor storage memory indefinitely (seen in
 #: tcloseness_audit).
 _TRACKED: list[tuple[DataFrame, Callable[[], object]]] = []
 _TRACKED_LOCK = threading.Lock()
@@ -157,8 +157,8 @@ def tracked_cache(df: DataFrame) -> DataFrame:
     Spark's cache manager matches by analyzed plan, so an identical
     fragment built twice inside ONE query (e.g. both sides of a
     self-join) hits one shared InMemoryRelation.  Callers that time
-    queries individually must release between queries — bench.py does
-    (VERDICT r15 #3): cross-QUERY cache hits make per-query seconds
+    queries individually must release between queries — bench.py does:
+    cross-QUERY cache hits make per-query seconds
     depend on execution order, so the caches are scoped to the query
     that built them and the honest cost is paid by every consumer.
     Unlike a checkpoint, a cache keeps its lineage: lost blocks (an

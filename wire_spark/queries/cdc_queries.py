@@ -103,8 +103,7 @@ _CDC_RESUME_ORACLE = _CDC_APPLY_ORACLE
               "overlapping at-least-once replay — restarted state must "
               "equal the straight one-shot fold (oracle-pinned)")
 def cdc_resume_restart(spark, sf_dir):
-    """Exactly-once-EFFECT restart (r13 registry addition, the one
-    VERDICT-r12-endorsed capacity slot): the reference's change-stream
+    """Exactly-once-EFFECT restart: the reference's change-stream
     source persists a resume token and, on restart, resumes the
     stream from it (sources/mongo.go:23-41 — ``resume_token`` is the
     envelope's first field precisely so consumers can checkpoint it);

@@ -490,7 +490,7 @@ def curation_token_budget_plan(spark, sf_dir):
 
     Cross-engine: per-doc quality is floor(distinct*1e4/n) — exact
     integers; the ranking key qsum/n_docs is one deterministic double
-    division (identical in both engines per NOTES.md rule 6); the
+    division (identical in both engines per PARITY.md rule 6); the
     budget predicate ``2*cum_tokens <= total`` is exact-integer.
 
     Scale shape: per-doc metrics are scan-projection HOFs; one

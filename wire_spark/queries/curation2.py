@@ -6,7 +6,7 @@ These extend the training-data-pipeline surface (SURVEY §2 gap-fill,
 same family as curation.py/sampling.py/text*.py — the reference
 ships no corpus tooling; behavioral anchor is its declared transform
 surface, ROADMAP.md:96-107).  All fixed-point arithmetic follows the
-NOTES.md parity rules: integer ``div`` with non-negative numerators,
+PARITY.md rules: integer ``div`` with non-negative numerators,
 per-addend floors before summation, no raw float aggregate crosses
 an engine boundary.
 """
@@ -369,11 +369,10 @@ def text_perplexity_bands(spark, sf_dir):
 
     Cross-engine determinism: per-token surprisal floors to integer
     micro-nats BEFORE summation (surprisal = -ln p, so every addend
-    and numerator is NON-negative and integer ``div``/``//`` agree —
-    the NOTES.md negative-division rule); the per-doc mean is one
-    integer division, and band edges are integers in the 1e6 domain,
-    so a band flip would need a full micro-nat of disagreement, not a
-    ulp.  Scale shape: unigram counts shuffle on token once, the
+    and numerator is NON-negative and integer ``div``/``//`` agree);
+    the per-doc mean is one integer division, and band edges are
+    integers in the 1e6 domain, so a band flip would need a full
+    micro-nat of disagreement, not a ulp.  Scale shape: unigram counts shuffle on token once, the
     vocabulary-sized model joins back hint-free, the per-doc fold
     shuffles on doc_id once, and the band rollup is grid-grain."""
     d = T(spark, sf_dir, "documents")

@@ -253,9 +253,10 @@ def minhash_band_signatures(sh: "DataFrame") -> "DataFrame":
     """(doc_id, band, bsig) band signatures for a (doc_id, shingle)
     relation — THE single implementation of the repo's MinHash
     arithmetic, shared by the catalog queries here and the at-rest
-    index (``operators/text_index.py``).  Stored signatures must
-    match freshly-signed probes bit-for-bit, so this arithmetic has
-    exactly one home.
+    index (``operators/text_index.py``), whose ``append_and_probe``
+    is also the streaming dedup (one call per micro-batch).  Stored
+    signatures must match freshly-signed probes bit-for-bit, so this
+    arithmetic has exactly one home.
 
     One md5 per shingle; 24 permutations via Carter-Wegman-style
     (h1 + p*h2) mod prime — pure 53-bit-safe integer arithmetic,

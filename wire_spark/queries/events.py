@@ -647,7 +647,7 @@ def events_survival_hazard(spark, sf_dir):
     # censoring rollup — materialize once.  tracked_cache, not
     # materialize: this relation is DATA-sized (one row per signup
     # user), and a local checkpoint keeps no lineage to recover from
-    # executor loss on a real cluster (ADVICE r15) — the cache keeps
+    # executor loss on a real cluster — the cache keeps
     # the lineage and is released by the bench/CLI after the query's
     # actions complete.
     # The count() materializes it eagerly so the two consumers below

@@ -14,7 +14,7 @@ only (ROADMAP.md:96-107); this family is training-data-pipeline /
 experimentation extension work the brief asks for beyond the
 reference surface.
 
-Cross-engine exactness (NOTES.md parity rules):
+Cross-engine exactness (PARITY.md rules):
 
 - All counters and fixed-point sums are integers; wide products run
   in DECIMAL(38,0) (Spark) / HUGEINT (DuckDB).  **Spark's ``div`` on
@@ -863,8 +863,8 @@ def events_did_lift(spark, sf_dir):
 
 # Powers-of-two activity cutpoints shared by the batch IPW query (both
 # dialects) and the streaming sibling (streaming/ab_stream.py imports
-# them) — one source of truth for the stratum domain (the ADVICE r10
-# single-source rule for duplicated expression text).
+# them) — one source of truth for the stratum domain (duplicated
+# expression text drifts).
 IPW_BAND_CUTPOINTS: tuple[int, ...] = (2, 4, 8, 16, 32, 64, 128, 256)
 
 #: dialect-neutral stratum CASE over a user's event count n_u

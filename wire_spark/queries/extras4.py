@@ -22,7 +22,7 @@ from wire_spark.queries._util import EVENTS_TIMED_CTE, T, events_timed, fmt_ts
 # frame ORDERs by event time, so rows without an in-domain timestamp
 # are filtered (the _util.py tier rule — keeping NULL order keys would
 # lean on both engines treating the NULL peer group alike, which holds
-# today but is fragile to frame changes; ADVICE r10).
+# today but is fragile to frame changes).
 _RANGE_FRAME_ORACLE = EVENTS_TIMED_CTE + """
 SELECT
   user_id, event_id,

@@ -520,9 +520,9 @@ def embedding_gram_matrix(spark, sf_dir):
                 if len(Xc) and np.abs(Xc).max() > 1024.0:
                     # unreachable through the registered queries since
                     # r13: gram_domain_cond() excludes |component| >
-                    # 1024 at the scan on BOTH engines (ADVICE r12
-                    # found the band (1024, ~3e4] was Spark-raise vs
-                    # DuckDB-result asymmetric).  Kept as an invariant
+                    # 1024 at the scan on BOTH engines (the band
+                    # (1024, ~3e4] was Spark-raise vs DuckDB-result
+                    # asymmetric).  Kept as an invariant
                     # backstop for direct kernel callers.
                     raise ValueError(
                         "gram kernel domain: |component| <= 1024 "
@@ -600,9 +600,8 @@ def basket_brand_pairs(spark, sf_dir):
     # the self-join key (hashpartitioning(orderkey) satisfies the
     # (orderkey, brand) distinct's clustering — subset rule), every
     # consumer reads the same ReusedExchange, and the self-join
-    # shuffles nothing further (guide §2.4).  Replaces the r15
-    # data-sized localCheckpoint (the ADVICE r15 executor-pinned
-    # class) — measured A/B in OPTIMIZATION_r16.md §5.
+    # shuffles nothing further (guide §2.4).  Replaces a
+    # data-sized, executor-pinned localCheckpoint.
     ob = (
         li.join(p, li.l_partkey == p.p_partkey)
         .select(F.col("l_orderkey").alias("orderkey"),
@@ -756,9 +755,9 @@ def embedding_power_iteration(spark, sf_dir):
                 if len(Xc) and np.abs(Xc).max() > 1024.0:
                     # unreachable through the registered queries since
                     # r13: gram_domain_cond() excludes |component| >
-                    # 1024 at the scan on BOTH engines (ADVICE r12
-                    # found the band (1024, ~3e4] was Spark-raise vs
-                    # DuckDB-result asymmetric).  Kept as an invariant
+                    # 1024 at the scan on BOTH engines (the band
+                    # (1024, ~3e4] was Spark-raise vs DuckDB-result
+                    # asymmetric).  Kept as an invariant
                     # backstop for direct kernel callers.
                     raise ValueError(
                         "gram kernel domain: |component| <= 1024 "

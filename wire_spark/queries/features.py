@@ -8,7 +8,7 @@ category as dedup/similarity/curation): each is a standard feature
 op a 100 TB pipeline runs daily, re-expressed as declarative Spark
 with an exact DuckDB oracle.
 
-Cross-engine notes (NOTES.md rules applied):
+Cross-engine notes (PARITY.md rules applied):
 - decay weights are 0.5^h with integer h — exact powers of two, so
   value*weight is the same double in both engines; each addend is
   floor-truncated to the integer domain before summation (msum).

@@ -16,7 +16,7 @@ Reference behavioral anchor: the reference validates CONFIGS up front
 (internal/utils/config.go) but ships no data-release gate; SURVEY §2.6
 scopes declarative quality/governance checks to this engine.
 
-Cross-engine exactness (NOTES.md discipline):
+Cross-engine exactness (PARITY.md rules):
 - the sensitive bucket is ``floor(c_acctbal / 1000.0e0)`` — float
   division + floor are IEEE-identical in both engines, and the only
   boundary values (exact multiples of 1000) are exactly

@@ -9,7 +9,7 @@ processor exposes only map/filter transforms (internal/pipeline,
 SURVEY §2.3); sequence mining is part of this repo's
 beyond-reference training-data surface.
 
-Cross-engine notes (NOTES.md rules):
+Cross-engine notes (PARITY.md rules):
 - ordering inside a user timeline uses the full tiebreak chain
   (ts, event_id) — event_id is unique, so lag() is deterministic.
 - transition probability = count/total: exact BIGINT numerator and

@@ -74,10 +74,9 @@ def _pair_relation(spark, sf_dir):
     reads both branches from ONE ReusedExchange, and the join itself
     needs no further shuffle (guide §2.4).  This replaced the r15
     eager local-checkpoint form — measured interleaved A/B
-    at sf0.1: ~1.62 s -> ~1.12 s steady-state (OPTIMIZATION_r16.md
-    §5), identical output — and removes a DATA-SIZED localCheckpoint
-    (executor-pinned, no reliable-checkpoint fallback: the ADVICE
-    r15 cluster-safety class).  At 100 TB the one reused exchange
+    at sf0.1: ~1.62 s -> ~1.12 s steady-state, identical output — and
+    removes a DATA-SIZED localCheckpoint (executor-pinned, with no
+    reliable-checkpoint fallback).  At 100 TB the one reused exchange
     moves the joined lineitem once; the order×brand aggregate never
     shuffles again."""
     li = T(spark, sf_dir, "lineitem").select(
@@ -255,8 +254,8 @@ def preference_bt_strength(spark, sf_dir):
             # Spark's `div` returns BIGINT, so `n * 1e12 div 1` would
             # ANSI-overflow past n ≈ 9.2e6 per pair, exactly the
             # s1-floors-to-0 regime the greatest() guard targets,
-            # while the DuckDB oracle's HUGEINT `//` kept going
-            # (ADVICE r10).  a ≥ 0 and b ≥ 1, so the exact decimal
+            # while the DuckDB oracle's HUGEINT `//` kept going.
+            # a ≥ 0 and b ≥ 1, so the exact decimal
             # quotient equals the floor on both engines.
             "sum(CAST(("
             " (CAST(n AS DECIMAL(38,0)) * 1000000000000"

@@ -78,8 +78,8 @@ def gram_domain_cond():
     per-component fixed-point budget: max |component| <= 1024, so
     per-row outer products (<= 1024^2 * 1e6 ~ 1.05e12) stay
     int64-exact inside the numpy partials.  The dd-gate alone admits
-    components up to ~1e6, which left an engine-ASYMMETRIC band
-    (ADVICE r12): for |component| in (1024, ~3e4] Spark's kernel
+    components up to ~1e6, which left an engine-ASYMMETRIC band:
+    for |component| in (1024, ~3e4] Spark's kernel
     raised its domain ValueError while the DuckDB oracle still
     returned rows.  Mirroring the bound into BOTH scans (oracle
     WHERE: ``list_max(list_transform(embedding::DOUBLE[], x ->
@@ -808,7 +808,7 @@ def ann_pq_adc(spark, sf_dir):
     # partial distances sum in INTEGER domain (floor(d*1e6) as long):
     # adding 8 truncated doubles in Spark's nondeterministic agg order
     # differs from DuckDB's in the last ulp — integer sums are exact
-    # in any order (NOTES.md parity rule 1 / msum)
+    # in any order (PARITY.md rule 1 / msum)
     adc = (
         assigned.join(F.broadcast(dist_table), ["m", "code"])
         .filter(F.col("vec_id") != F.col("qid"))
@@ -1433,8 +1433,8 @@ FROM assign GROUP BY cid ORDER BY cid
 @register("vector_index_cdc_update", oracle=VECTOR_INDEX_CDC_ORACLE, bench=True,
           doc="incremental IVF cell maintenance off the CDC fold == one-shot rebuild")
 def vector_index_cdc_update(spark, sf_dir):
-    """Incremental IVF assignment maintenance driven off the CDC fold
-    (VERDICT r13 endorsed stretch): the reference's streaming-first
+    """Incremental IVF assignment maintenance driven off the CDC fold:
+    the reference's streaming-first
     identity (README.md:7) applied to the vector-index surface — the
     index FOLLOWS the change stream instead of being rebuilt per
     batch.
@@ -1610,8 +1610,8 @@ ORDER BY qid, rn
 
 
 def vector_index_search_stored(spark, sf_dir):
-    """The full production ANN lifecycle under one query (VERDICT r14
-    #7 endorsed stretch): build the IVF-PQ index AT REST, apply a CDC
+    """The full production ANN lifecycle under one query:
+    build the IVF-PQ index AT REST, apply a CDC
     change stream to it via ``merge_index_update`` (O(changes) MERGE,
     operators/vector_index.py), then answer top-5 queries FROM THE
     STORED index with ``search_index`` — change stream to

@@ -211,7 +211,8 @@ def quantile_histogram_sketch(spark, sf_dir):
     the cumulative histogram. The cumulative window is a
     SinglePartition exchange over AT MOST 1024 rows — a constant
     independent of input size, which is what makes it admissible
-    (contrast NOTES.md's ban on *data-sized* global windows). The
+    (contrast a *data-sized* global window, which funnels the whole
+    input through one task). The
     min/max pre-pass is a scalar aggregate broadcast back into the
     binning scan.
 

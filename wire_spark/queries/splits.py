@@ -111,7 +111,7 @@ def split_group_aware(spark, sf_dir):
 # Boundaries are integer epoch-second arithmetic over the observed
 # span (train < 70%, 5% embargo, test >= 75%) — deterministic in both
 # engines (unix_timestamp truncates; DuckDB floors epoch() before the
-# cast, the NOTES.md rule).  The output MEASURES the group leakage a
+# cast, PARITY.md rule 2).  The output MEASURES the group leakage a
 # pure time split leaves behind: n_users_seen_in_train counts test/
 # embargo users that also appear in train — on this synthetic stream
 # every user spans the month, so the column reads 100% leaky, which

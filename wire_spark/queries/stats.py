@@ -14,7 +14,7 @@ only (ROADMAP.md:96-107; internal/pipeline/pipeline.go:93-159 executes
 generic transforms) — this family is the training-data-pipeline
 extension the brief asks for beyond the reference surface.
 
-Cross-engine exactness follows the NOTES.md parity rules:
+Cross-engine exactness follows the PARITY.md rules:
 
 - Integer counts cross engines raw; every float statistic is built
   from the SAME IEEE op sequence on integer-derived doubles in both

@@ -6,7 +6,7 @@ text.py's per-doc stats and sampling.py's Zipf profile).
 Cross-engine design notes:
 - tf/df/N are exact integers; tf-idf's single ``ln`` is evaluated on
   the same exact rational in both engines and floor-truncated at 4dp
-  (t4) — verified hash-stable at sf0.001/0.01/0.1 (NOTES.md rule 6).
+  (t4) — verified hash-stable at sf0.001/0.01/0.1 (PARITY.md rule 6).
 - collocation "lift" avoids ``ln`` entirely: the PMI ordering is
   monotone in the exact-integer cross ratio c_ab*T / (c_a*c_b), so
   ranking and output use the rational directly — bit-stable with no

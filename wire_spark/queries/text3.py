@@ -7,7 +7,7 @@ low entropy = repeated boilerplate, abnormally high = random noise.
 
 Cross-engine: H = ln(n) - (1/n)*sum(c*ln c) — each distinct token's
 ``c*ln(c)`` addend is floored into integer micro-units BEFORE the
-(order-free) sum, per NOTES.md rule 1/6; one deterministic division
+(order-free) sum, per PARITY.md rules 1/6; one deterministic division
 chain at the end, floor-truncated to 4dp.
 """
 
@@ -137,7 +137,7 @@ def text_bigram_logprob(spark, sf_dir):
     (r13 widening — a LONG accumulator broke at ~2.3e11 bigrams per
     document; the exact int128 converts to DOUBLE identically in
     both engines); one floor-truncated division chain at the end
-    (NOTES.md rule 1).
+    (PARITY.md rule 1).
 
     Scale shape: bigram extraction is a pure array op inside the
     scan projection (transform over sequence — NO shuffle, text
@@ -276,7 +276,7 @@ def text_gopher_quality_rules(spark, sf_dir):
 
     Cross-engine parity: every rule is an EXACT-INTEGER comparison
     (e.g. mean length in [3,10] as ``3*nw <= sumlen <= 10*nw``) — no
-    float ratio ever crosses an engine boundary (NOTES.md rule 1).
+    float ratio ever crosses an engine boundary (PARITY.md rule 1).
 
     Scale shape: all per-doc metrics are array HOFs inside the scan
     projection (split/filter/aggregate/transform — text never

@@ -21,7 +21,7 @@ Reference anchor: tarungka/wire declares aggregation/analytics intent
 only (ROADMAP.md:96-107); these extend the analytics surface the
 brief asks for beyond the reference.
 
-Cross-engine exactness (NOTES.md rules): counts are integers; wide
+Cross-engine exactness (PARITY.md rules): counts are integers; wide
 products run in DECIMAL(38,0)/HUGEINT; ratios are one identical IEEE
 tree floored into fixed point; the SES forecast never touches a
 float at all (dyadic weights as shiftleft, one exact integer div).

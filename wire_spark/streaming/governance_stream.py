@@ -171,8 +171,7 @@ def contract_gate(
     Exactly-once note: foreachBatch re-runs a batch after recovery
     with the SAME batch_id; the audit append keys on batch_id so
     replays are detectable downstream (parquet appends themselves are
-    at-least-once — a table format upgrades this to exactly-once, see
-    NOTES.md table-format probe).
+    at-least-once — a table format upgrades this to exactly-once).
     """
     from wire_spark.operators.contracts import validate
 
